@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Partition-spreading for CPU-heavy narrow stages.
   *
@@ -21,10 +21,13 @@ object Partitioning {
     */
   def spread(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
-    val spark = df.sparkSession
-    val target = math.max(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      spark.sparkContext.defaultParallelism)
+    val target = parallelism(df.sparkSession)
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
+
+  /** The session's parallelism target: the larger of
+    * `spark.sql.shuffle.partitions` and the default parallelism. */
+  def parallelism(spark: SparkSession): Int = math.max(
+    spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+    spark.sparkContext.defaultParallelism)
 }

@@ -24,8 +24,14 @@ import org.apache.spark.sql.functions._
   *    is applied to every vector of the replica alike, so every
   *    intra-replica cosine — and with it the near-dup structure — is
   *    EXACTLY preserved, while cross-replica cosines decorrelate.
+  *  - with `hotShare` > 0, that share of the documents (picked by a
+  *    hash of the id) starts with the boilerplate line [[HotLine]]:
+  *    one 3-word shingle then reaches df ≈ hotShare × documents (10⁴
+  *    at sf1 with 0.2), the hot key a near-dup operator must split
+  *    rather than hand to one task. Derived locally; nothing is read
+  *    beyond `srcDir`.
   *
-  * Usage: `runMain graft.ScaleUp <srcDir> <outDir> [factor]`.
+  * Usage: `runMain graft.ScaleUp <srcDir> <outDir> [factor] [hotShare]`.
   */
 object ScaleUp {
 
@@ -35,13 +41,19 @@ object ScaleUp {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
+    val hotShare = if (args.length > 3) args(3).toDouble else 0.0
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    scaleAll(spark, src, out, factor)
+    scaleAll(spark, src, out, factor, hotShare)
     spark.stop()
   }
 
+  /** The boilerplate line of the hot-key variant: three words, so
+    * exactly one shingle is shared by every document carrying it. */
+  val HotLine = "copyright notice applies"
+
   def scaleAll(spark: SparkSession, src: String, out: String,
-      factor: Int): Unit = {
+      factor: Int, hotShare: Double = 0.0): Unit = {
+    require(hotShare >= 0 && hotShare <= 1, s"hotShare must be in [0, 1]: $hotShare")
     def read(t: String) = Tables.load(spark, src, t)
     def write(t: String)(df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$out/$t.parquet")
@@ -53,7 +65,7 @@ object ScaleUp {
       keys.foldLeft(df)((d, k) =>
         d.withColumn(k, col(k) + lit(i * KeyStride)))
 
-    write("documents")(replicated("documents") { (df, i) =>
+    write("documents")(withHotLine(replicated("documents") { (df, i) =>
       val shifted = shiftKeys(df, i, "doc_id")
       if (i == 0) shifted
       else {
@@ -68,7 +80,7 @@ object ScaleUp {
         perturbed.withColumn("n_chars", length(col("text")).cast("long"))
           .select("doc_id", "text", "lang", "source", "n_chars")
       }
-    })
+    }, hotShare))
 
     write("embeddings")(replicated("embeddings") { (df, i) =>
       val shifted = shiftKeys(df, i, "vec_id")
@@ -93,6 +105,17 @@ object ScaleUp {
     write("customer")(replicated("customer")(shiftKeys(_, _, "c_custkey")))
     Seq("part", "supplier", "nation", "region").foreach(t => write(t)(read(t)))
   }
+
+  /** Prefix [[HotLine]] to the `hotShare` of documents whose id hashes
+    * below it; `n_chars` follows the new text. */
+  private[graft] def withHotLine(docs: DataFrame, hotShare: Double): DataFrame =
+    if (hotShare <= 0) docs
+    else {
+      val hot = pmod(xxhash64(col("doc_id")), lit(1000000L)) < lit((hotShare * 1e6).round)
+      docs.withColumn("text",
+          when(hot, concat(lit(HotLine + " "), col("text"))).otherwise(col("text")))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+    }
 
   /** Deterministic word shuffle seeded by (content hash, replica):
     * identical texts shuffle identically, so duplicate groups survive

@@ -357,14 +357,15 @@ object SparkEntry {
         size(graft.functions.NativeText.shinglesOf(col("_toks"), 3)).as("n_shingles"))
 
   /** N-gram Jaccard near-dup pairs via the shared inverted shingle
-    * index (ingest artifact — no per-query re-shingling). The plain
-    * index self-join IS the winner here: a PPJoin prefix-filter
-    * variant was built and measured ~8× slower at sf0.1 (8.5 s vs
-    * 1.1 s) and >30× at sf1 (SCALING.md round 11) — this corpus's
-    * Σdf² join mass is
-    * modest while the prefix machinery's global df-rank window scales
-    * with the postings; the df-capped variant remains the measured
-    * scale path. */
+    * index (ingest artifact — no per-query re-shingling). The pairs
+    * are counted exactly by Dedup's posting-list kernel: per-shingle
+    * lists are copied to the partitions owning their members and
+    * counted in memory, so the Σdf² co-posting rows of an index
+    * self-join are never materialised and a hot shingle's work
+    * spreads over every partition (SCALING.md, the posting-list
+    * kernel entry). A PPJoin prefix-filter variant measured ~8×
+    * slower than the self-join at sf0.1 (SCALING.md round 11); the
+    * df-capped variant remains the recall-trading scale path. */
   private def q17(s: SparkSession, dir: String): DataFrame =
     Dedup.jaccardPairsFromIndex(docsShingles(s, dir), "doc_id", 0.2)
 

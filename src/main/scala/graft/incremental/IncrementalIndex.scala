@@ -44,12 +44,21 @@ object IncrementalIndex {
   }
 
   /** The queryable index over the maintained base: vocab-sized
-    * aggregations and joins only — no document is re-read. */
+    * aggregations and joins only — no document is re-read.
+    *
+    * The index reads the base's current part files, not its directory.
+    * Spark's cache matches a file relation by its paths, so a plan over
+    * the directory would be served the frames of a still-persisted
+    * index over an earlier base. Every merge writes new part files, so
+    * the plan names this snapshot, and no cache entry has to be
+    * invalidated or re-planned after a sync. */
   def index(spark: SparkSession, basePath: String, idCol: String,
       eager: Boolean = false): Search.Bm25Index = {
-    val base = ParquetSink.read(spark, basePath).getOrElse(
+    if (!ParquetSink.exists(basePath))
       throw new IllegalStateException(s"no token base at $basePath — " +
-        "run syncTokenBase with the initial corpus first"))
-    Search.buildIndexFromTokens(base, idCol, eager)
+        "run syncTokenBase with the initial corpus first")
+    val parts = new java.io.File(basePath).listFiles().toSeq
+      .map(_.getPath).filter(_.endsWith(".parquet")).sorted
+    Search.buildIndexFromTokens(spark.read.parquet(parts: _*), idCol, eager)
   }
 }

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.Partitioner
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 
 import graft.Partitioning
 import graft.functions.{NativeText, Sketch, TextFunctions, VectorFunctions}
@@ -15,10 +20,11 @@ import graft.functions.{NativeText, Sketch, TextFunctions, VectorFunctions}
   *
   * Scale notes (100 TB):
   *  - exact: one shuffle on a 32-char key; map-side combine applies.
-  *  - jaccard: candidate pairs ONLY via the inverted shingle index
-  *    (explode → self-join on shingle) — never a cross join. At scale,
-  *    swap the exact index for MinHash bands (same pair-generation
-  *    shape, bounded candidates per bucket).
+  *  - jaccard: pairs ONLY via the inverted shingle index — never a
+  *    cross join. The exact faces count them with the posting-list
+  *    kernel ([[PostingPairs]]: lists copied to the owners of their
+  *    members, counted in memory, no co-posting rows); at scale, the
+  *    df-capped face or MinHash bands bound the candidates.
   *  - minhashLsh: k permutations via min(md5(seed‖shingle)) — a string
   *    min is a cheap map-side-combinable agg; band buckets shuffle on
   *    the band hash, so skew = duplicate clusters, which is the signal.
@@ -173,19 +179,15 @@ object Dedup {
 
   /** Candidate pairs (a < b) sharing >= 1 shingle, with exact Jaccard
     * similarity over the distinct-shingle sets, filtered to >= minSim.
+    * |A ∩ B|, |A| and |B| come from the posting-list pair-count kernel
+    * (see [[jaccardPairsFromIndex]]).
     *
-    * |A ∩ B| comes from the inverted-index self-join (group count);
-    * |A| and |B| from a per-doc shingle-count aggregate (broadcast-able
-    * when the doc count is modest; at 100 TB it's a shuffle join on id,
-    * co-partitioned with the pair table).
-    */
-  /** NOTE (r18 review pass 3): this convenience face caches the
-    * transient shingle index (it feeds three plan branches with three
-    * different partitionings — no exchange reuse) and has NO release
-    * path — the cache pins until driver GC, the kmeansIvf class of
-    * pin. One-shot callers are fine; anything long-lived should build
-    * the index once ([[CorpusArtifacts.shingleIndex]] — the persisted
-    * ingest artifact) and call [[jaccardPairsFromIndex]], owning the
+    * NOTE (r18 review pass 3): this convenience face caches the
+    * transient shingle index and has NO release path — the cache pins
+    * until driver GC, the kmeansIvf class of pin. One-shot callers are
+    * fine; anything long-lived should build the index once
+    * ([[CorpusArtifacts.shingleIndex]] — the persisted ingest
+    * artifact) and call [[jaccardPairsFromIndex]], owning the
     * lifecycle. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minSim: Double = 0.5): DataFrame =
@@ -193,64 +195,50 @@ object Dedup {
       idCol, minSim)
 
   /** Same, over a prebuilt (persisted) (id, shingle) inverted index —
-    * the ingest-artifact path ([[CorpusArtifacts.shingleIndex]]). */
+    * the ingest-artifact path ([[CorpusArtifacts.shingleIndex]]).
+    * Output: (id_a, id_b, n_common, jaccard) with id_a < id_b.
+    *
+    * The pairs are counted by [[PostingPairs]], not by a self-join on
+    * the shingle: the index groups into per-shingle posting lists,
+    * each list travels to the partitions that own its members, and
+    * each partition counts its own documents' partners in memory. No
+    * co-posting row (Σ df·(df−1)/2 of them) and no pair table is ever
+    * materialised or shuffled; only the pairs that pass the
+    * threshold leave the kernel, and the jaccard expression and
+    * round(…, 6) below run on those rows alone.
+    *
+    * Semantics are the self-join's: the index is a multiset, so a
+    * duplicated (id, shingle) row counts with multiplicity in both
+    * n_common and the per-document count; rows with a null id drop;
+    * a null shingle counts towards its document's size but never
+    * pairs. The id column must be integral. */
   def jaccardPairsFromIndex(idx: DataFrame, idCol: String,
       minSim: Double): DataFrame = {
-    // |A| / |B| attach BEFORE the self-join: riding the counts on the
-    // posting rows (16 bytes/row) lets ONE counts subtree serve both
-    // sides — the post-aggregation form planned the counts aggregate
-    // twice (two subtrees, two broadcast builds) and probed the pair
-    // table twice, and the pair table (Σdf² rows) outweighs the
-    // postings it replaces here. No broadcast hint: the planner
-    // broadcasts doc-cardinality counts while they fit and falls back
-    // to an id-co-partitioned join at corpus scale. n_a/n_b are
-    // constant within an (id_a, id_b) group, folded out of the
-    // aggregate with max(). Same pairs, same counts, same jaccard.
-    val counts = idx.groupBy(col(idCol)).agg(count(lit(1)).as("n_shingles"))
-    val withN = idx.join(counts, Seq(idCol))
-    val a = withN.select(col(idCol).as("id_a"), col("shingle"),
-      col("n_shingles").as("n_a"))
-    val b = withN.select(col(idCol).as("id_b"), col("shingle"),
-      col("n_shingles").as("n_b"))
-    // Two r22 prefilter experiments on the join, both measured and
-    // REVERTED (negative results, kept honest):
-    //  - length-ratio prefilter (jaccard >= t needs min(n_a,n_b) >=
-    //    t*max — provably exact by substituting least(n_a,n_b) for
-    //    n_common in the output's own cast chain, double division
-    //    being monotone): prunes only 2.7% of the 1.35M ordered join
-    //    rows at sf0.1 (doc lengths are near-uniform on this corpus),
-    //    so the per-row division cost exceeded the aggregate savings
-    //    — warm steady 1.0-1.1 s (plain) vs 1.3-1.4 s (filtered), and
-    //    the same-box A/B bench card read 0.93x. An earlier probe
-    //    that showed the filter winning was a JIT run-order artifact
-    //    (first-timed variant pays cold codegen); re-measured with
-    //    the plain form LAST, it wins.
-    //  - df >= 2 posting prefilter (df==1 keys can't pair): only 188
-    //    of 242k postings at sf0.1 — the keep-set broadcast join cost
-    //    more than the probes it saved.
-    // On a corpus with genuinely mixed document lengths the ratio
-    // filter's math stands (it can only drop rows the jaccard
-    // threshold drops) — re-probe selectivity before re-adding.
-    a.join(b, Seq("shingle"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_common"),
-        max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("n_a") + col("n_b") - col("n_common")).cast("double"))
+    val idType = PostingPairs.integralId(idx, idCol)
+    val postings = PostingPairs.postings(idx, idCol, 0)
+    PostingPairs.pairCounts(postings, cross = false, minSim)
+      .withColumn("jaccard", jaccardOf(col("n_common"), col("n_a"), col("n_b")))
       .where(col("jaccard") >= minSim)
-      .select(col("id_a"), col("id_b"), col("n_common"), round(col("jaccard"), 6).as("jaccard"))
+      .select(col("a").cast(idType).as("id_a"),
+        col("b").cast(idType).as("id_b"), col("n_common"),
+        round(col("jaccard"), 6).as("jaccard"))
   }
+
+  /** The Jaccard of a pair from its shared and per-document counts —
+    * the one expression every exact face filters and rounds. */
+  private def jaccardOf(common: Column, na: Column, nb: Column): Column =
+    common.cast("double") / (na + nb - common).cast("double")
 
   // A PPJoin-style prefix-filter variant (global df-ascending
   // canonical order, |x| - ceil(t|x|) + 1 prefixes, length filter,
   // exact verify) was built, proven result-identical on this corpus,
-  // and MEASURED OUT: 8.5 s steady vs 1.1 s at sf0.1 and >600 s vs
-  // 18.1 s at sf1 — on this workload the Σdf² join mass is modest
-  // while the prefix machinery's global df-rank window scales with
-  // the full postings list. The df-capped variant below remains the
-  // measured 100 TB path (SCALING.md rounds 9 and 11).
+  // and MEASURED OUT against the self-join this kernel replaced:
+  // 8.5 s steady vs 1.1 s at sf0.1 and >600 s vs 18.1 s at sf1 — the
+  // prefix machinery's global df-rank window scales with the full
+  // postings list. The df-capped variant below remains the recall-
+  // trading 100 TB path (SCALING.md rounds 9 and 11); the exact
+  // kernel's cost is the replicated postings plus Σ df·(df−1)/2
+  // in-memory increments, spread over the partitions by owner.
 
   /** The 100 TB form of [[jaccardPairsFromIndex]]: frequent shingles
     * (document frequency > `maxDf`) are dropped from CANDIDATE
@@ -310,14 +298,16 @@ object Dedup {
 
   /** The 100 TB form of [[jaccardPairsFromIndex]] with the df-cap
     * applied AUTOMATICALLY once the corpus outgrows the exact plan:
-    * below `switchAt` documents the full inverted-index self-join is
-    * both exact and fast (measured 1.1 s at 5k docs), above it the
-    * quadratic join mass bites (18.1 s at 50k docs — SCALING.md) and
+    * below `switchAt` documents the exact face runs, above it
     * candidate generation switches to [[jaccardPairsCappedFromIndex]]
-    * at the measured cap (64 → 6.5 s at 50k docs; any FIXED cap makes
-    * the join mass linear in postings, Σdf·(df−1)/2 ≤ cap·P/2, so the
-    * cap is a recall knob, not an n-law — see the capped scaladoc's
-    * recall bound).
+    * at the measured cap (64; any FIXED cap makes the candidate mass
+    * linear in postings, Σdf·(df−1)/2 ≤ cap·P/2, so the cap is a
+    * recall knob, not an n-law — see the capped scaladoc's recall
+    * bound). The switch point was measured against the self-join the
+    * exact face used to run (18.1 s vs 6.5 s capped at 50k docs,
+    * 32 cores); the posting-list kernel is much cheaper there
+    * (SCALING.md, the posting-list kernel entry), so the exact side
+    * of the switch is conservative until it is re-measured.
     *
     * The document count, when not supplied by the caller (who often
     * has it), is estimated with one map-side-combinable HLL pass over
@@ -871,41 +861,28 @@ object Dedup {
 
   /** Cross-corpus contamination check (train-vs-benchmark overlap):
     * Jaccard pairs BETWEEN two corpora over their shingle indexes —
-    * the asymmetric twin of [[jaccardPairsFromIndex]]. The shuffle is
-    * on the shingle key (the benchmark side is usually small enough
-    * to broadcast); the score is the exact n-gram Jaccard, so a
-    * training document is flagged for exclusion wherever it shares
-    * `minSim` of its shingle set with any benchmark document. At
-    * 100 TB the same df-cap escape as the self-join applies to the
-    * TRAIN side's boilerplate shingles. Output:
-    * (train_id, bench_id, n_common, jaccard). */
+    * the asymmetric twin of [[jaccardPairsFromIndex]], counted by the
+    * same [[PostingPairs]] kernel: the two indexes' posting lists merge
+    * per shingle, each list travels to the owners of its TRAIN
+    * members, and a pair counts only when it crosses the sides (a
+    * train and a bench id may carry the same value and stay distinct
+    * documents). The score is the exact n-gram Jaccard, so a training
+    * document is flagged for exclusion wherever it shares `minSim` of
+    * its shingle set with any benchmark document. Same multiset and
+    * null-id semantics as the self face; both id columns must be
+    * integral. Output: (train_id, bench_id, n_common, jaccard). */
   def crossJaccardPairs(trainIdx: DataFrame, trainIdCol: String,
       benchIdx: DataFrame, benchIdCol: String,
       minSim: Double): DataFrame = {
-    // r22: the [[jaccardPairsFromIndex]] reshape applied to the cross
-    // face — per-doc counts attach to the POSTING rows before the
-    // shingle join (one counts subtree per side; the pair table is
-    // probed once, not re-joined twice). Identical output: n_t/n_b
-    // are constant per (train, bench) pair, folded out with max().
-    // (The length-ratio prefilter probed on the self-join face was
-    // measured out there — see jaccardPairsFromIndex — and is not
-    // added here either.)
-    val tc = trainIdx.groupBy(col(trainIdCol))
-      .agg(count(lit(1)).as("n_t"))
-    val bc = benchIdx.groupBy(col(benchIdCol))
-      .agg(count(lit(1)).as("n_b"))
-    val t = trainIdx.join(tc, Seq(trainIdCol))
-      .select(col(trainIdCol).as("train_id"), col("shingle"), col("n_t"))
-    val b = benchIdx.join(bc, Seq(benchIdCol))
-      .select(col(benchIdCol).as("bench_id"), col("shingle"), col("n_b"))
-    t.join(b, Seq("shingle"))
-      .groupBy(col("train_id"), col("bench_id"))
-      .agg(count(lit(1)).as("n_common"),
-        max(col("n_t")).as("n_t"), max(col("n_b")).as("n_b"))
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (col("n_t") + col("n_b") - col("n_common")).cast("double"))
+    val trainType = PostingPairs.integralId(trainIdx, trainIdCol)
+    val benchType = PostingPairs.integralId(benchIdx, benchIdCol)
+    val postings = PostingPairs.postings(trainIdx, trainIdCol, 0)
+      .unionAll(PostingPairs.postings(benchIdx, benchIdCol, 1))
+    PostingPairs.pairCounts(postings, cross = true, minSim)
+      .withColumn("jaccard", jaccardOf(col("n_common"), col("n_a"), col("n_b")))
       .where(col("jaccard") >= minSim)
-      .select(col("train_id"), col("bench_id"), col("n_common"),
+      .select(col("a").cast(trainType).as("train_id"),
+        col("b").cast(benchType).as("bench_id"), col("n_common"),
         round(col("jaccard"), 6).as("jaccard"))
   }
 
@@ -1631,5 +1608,343 @@ object Dedup {
       .localCheckpoint(true)
     assigned.unpersist()
     verdicts
+  }
+}
+
+/** The exact posting-list pair-count kernel behind
+  * [[Dedup.jaccardPairsFromIndex]] and [[Dedup.crossJaccardPairs]].
+  *
+  *  1. Postings `(shingle, side, id, n)` hash-partition by shingle and
+  *     sort by (shingle, side, id). Each shingle's run becomes one
+  *     posting list of distinct members; a member carries its
+  *     document's row count `n` and its multiplicity in the list.
+  *     Lists that cannot pair drop: one member, or (cross mode) one
+  *     side missing.
+  *  2. A list is copied to every partition that OWNS one of its
+  *     members (the owner of an id is a fixed mix of it modulo the
+  *     partition count), so at most min(members, partitions) copies.
+  *     Each copy holds what its owner needs: in self mode the suffix
+  *     from the owner's first member, in cross mode the owner's train
+  *     members and every bench member.
+  *  3. Each partition takes its documents one at a time and adds up,
+  *     in a dense accumulator, the shared postings with every later
+  *     member of the lists holding it (b > a in self mode, every bench
+  *     member in cross mode). It emits only the pairs whose Jaccard
+  *     passes `minSim` — the final filter's own expression, so the
+  *     prefilter is never stricter than it.
+  *
+  * A hot shingle's list is split by probing document over every
+  * partition instead of landing on one join task, and its
+  * df·(df−1)/2 co-postings are in-memory increments, not rows. Both
+  * shuffles use an explicit partition count (the session's
+  * [[Partitioning.parallelism]]): AQE never coalesces them into one
+  * task. A count task holds the copies it receives in memory; a list
+  * with df ≥ partitions reaches every task.
+  */
+private[operators] object PostingPairs {
+
+  /** (a, b, n_common, n_a, n_b): `a` is the owned (train) document. */
+  private val Schema = StructType(Seq("a", "b", "n_common", "n_a", "n_b")
+    .map(StructField(_, LongType, nullable = false)))
+
+  /** The id column's type; the kernel keys documents by a long. */
+  def integralId(idx: DataFrame, idCol: String): DataType = {
+    val t = idx.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+      s"exact pair counting needs an integral id column: $idCol is $t")
+    t
+  }
+
+  /** (shingle, side, id, n) postings: null ids drop, and `n` counts
+    * every row of the document, null shingles included, while a
+    * null-shingle row itself never pairs. */
+  def postings(idx: DataFrame, idCol: String, side: Int): DataFrame = {
+    val live = idx.where(col(idCol).isNotNull)
+    val counts = live.groupBy(col(idCol)).agg(count(lit(1)).as("_n"))
+    // counts have one row per document, so they are never larger than
+    // the postings. When the postings themselves fit a broadcast, AQE
+    // may pick THEM as the build side and probe with the counts
+    // coalesced into one partition — every posting then flows through
+    // one task. Broadcasting the counts there pins the right side; at
+    // corpus scale the planner chooses.
+    val conf = idx.sparkSession.sessionState.conf
+    val small = idx.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      conf.autoBroadcastJoinThreshold
+    live.where(col("shingle").isNotNull)
+      .join(if (small) broadcast(counts) else counts, Seq(idCol))
+      .select(col("shingle"), lit(side).as("side"),
+        col(idCol).cast("long").as("id"), col("_n").as("n"))
+  }
+
+  /** Pairs sharing at least one posting with their exact counts,
+    * prefiltered at `minSim`. Self mode pairs a < b within side 0;
+    * cross mode pairs a side-0 with a side-1 document. */
+  def pairCounts(postings: DataFrame, cross: Boolean,
+      minSim: Double): DataFrame = {
+    val spark = postings.sparkSession
+    val parts = Partitioning.parallelism(spark)
+    val copies = postings.repartition(parts, col("shingle"))
+      .sortWithinPartitions("shingle", "side", "id")
+      .queryExecution.toRdd
+      .mapPartitions(rows => listCopies(rows, parts, cross))
+    val pairs = copies.partitionBy(new Owners(parts))
+      .mapPartitionsWithIndex((q, it) =>
+        countOwned(q, parts, it.map(_._2), cross, minSim))
+    spark.createDataFrame(pairs, Schema)
+  }
+
+  /** The 64-bit murmur finalizer: runs of sequential ids spread
+    * evenly over owners and hash slots. */
+  private def mix(id: Long): Long = {
+    var h = id
+    h = (h ^ (h >>> 33)) * 0xff51afd7ed558ccdL
+    h = (h ^ (h >>> 33)) * 0xc4ceb9fe1a85ec53L
+    h ^ (h >>> 33)
+  }
+
+  /** Owner partition of an id. */
+  private def owner(id: Long, parts: Int): Int =
+    java.lang.Math.floorMod(mix(id), parts.toLong).toInt
+
+  /** Routes a copy keyed by its owner to that partition. */
+  private final class Owners(parts: Int) extends Partitioner {
+    def numPartitions: Int = parts
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+    override def equals(o: Any): Boolean = o match {
+      case p: Owners => p.numPartitions == parts
+      case _ => false
+    }
+    override def hashCode: Int = parts
+  }
+
+  /** One owner's copy of a posting list, in list order: ids, document
+    * counts, multiplicities (null when all are 1) and, in cross mode,
+    * the number of leading train members. */
+  private final class Copy(val ids: Array[Long], val ns: Array[Long],
+      val mult: Array[Int], val split: Int) extends Serializable
+
+  private def listCopies(rows: Iterator[InternalRow], parts: Int,
+      cross: Boolean): Iterator[(Int, Copy)] = {
+    val in = rows.buffered
+    val list = new Members(parts)
+    Iterator.continually(()).takeWhile(_ => in.hasNext).flatMap { _ =>
+      val key = in.head.getUTF8String(0).clone()
+      list.clear()
+      while (in.hasNext && in.head.getUTF8String(0) == key) {
+        val r = in.next()
+        list.add(r.getInt(1), r.getLong(2), r.getLong(3))
+      }
+      if (cross) list.crossCopies() else list.selfCopies()
+    }
+  }
+
+  /** The posting list under construction: distinct (side, id) members
+    * in sort order, side 0 first. */
+  private final class Members(parts: Int) {
+    private var size = 0
+    private var sides = new Array[Int](16)
+    private var ids = new Array[Long](16)
+    private var ns = new Array[Long](16)
+    private var mult = new Array[Int](16)
+    private var dup = false
+    private val firstAt = Array.fill(parts)(-1)
+
+    def clear(): Unit = { size = 0; dup = false }
+
+    def add(side: Int, id: Long, n: Long): Unit =
+      if (size > 0 && ids(size - 1) == id && sides(size - 1) == side) {
+        mult(size - 1) += 1
+        dup = true
+      } else {
+        if (size == ids.length) {
+          sides = java.util.Arrays.copyOf(sides, size * 2)
+          ids = java.util.Arrays.copyOf(ids, size * 2)
+          ns = java.util.Arrays.copyOf(ns, size * 2)
+          mult = java.util.Arrays.copyOf(mult, size * 2)
+        }
+        sides(size) = side; ids(size) = id; ns(size) = n; mult(size) = 1
+        size += 1
+      }
+
+    private def copy(pos: Array[Int], split: Int): Copy =
+      new Copy(pos.map(ids(_)), pos.map(ns(_)),
+        if (dup) pos.map(mult(_)) else null, split)
+
+    private def suffix(from: Int): Copy = new Copy(
+      java.util.Arrays.copyOfRange(ids, from, size),
+      java.util.Arrays.copyOfRange(ns, from, size),
+      if (dup) java.util.Arrays.copyOfRange(mult, from, size) else null, -1)
+
+    /** Self mode: each owner gets the suffix from its first member. */
+    def selfCopies(): Iterator[(Int, Copy)] = {
+      if (size < 2) return Iterator.empty
+      val owners = ArrayBuffer.empty[Int]
+      var i = 0
+      while (i < size - 1) { // the last member has no later partner
+        val q = owner(ids(i), parts)
+        if (firstAt(q) < 0) { firstAt(q) = i; owners += q }
+        i += 1
+      }
+      val out = owners.map { q =>
+        val from = firstAt(q)
+        firstAt(q) = -1
+        q -> suffix(from)
+      }
+      out.iterator
+    }
+
+    /** Cross mode: each owner of a train member gets its own train
+      * members followed by every bench member. */
+    def crossCopies(): Iterator[(Int, Copy)] = {
+      var split = 0
+      while (split < size && sides(split) == 0) split += 1
+      if (split == 0 || split == size) return Iterator.empty
+      val byOwner = (0 until split).groupBy(i => owner(ids(i), parts))
+      val bench = Array.range(split, size)
+      byOwner.toSeq.map { case (q, mine) =>
+        q -> copy(mine.toArray ++ bench, mine.size)
+      }.iterator
+    }
+  }
+
+  /** Step 3 on partition `q`: every owned document's passing pairs. */
+  private def countOwned(q: Int, parts: Int, in: Iterator[Copy],
+      cross: Boolean, minSim: Double): Iterator[Row] = {
+    val lists = in.toArray
+    // dense local index per distinct document; the two sides of a
+    // cross count keep separate dictionaries (their ids may collide)
+    val dict = Array(new LongIntMap, new LongIntMap)
+    var idOf = new Array[Long](64)
+    var nOf = new Array[Long](64)
+    var docs = 0
+    val locs = lists.map { c =>
+      val l = new Array[Int](c.ids.length)
+      var i = 0
+      while (i < l.length) {
+        val side = if (cross && i >= c.split) 1 else 0
+        l(i) = dict(side).getOrInsert(c.ids(i), docs)
+        if (l(i) == docs) {
+          if (docs == idOf.length) {
+            idOf = java.util.Arrays.copyOf(idOf, docs * 2)
+            nOf = java.util.Arrays.copyOf(nOf, docs * 2)
+          }
+          idOf(docs) = c.ids(i); nOf(docs) = c.ns(i); docs += 1
+        }
+        i += 1
+      }
+      l
+    }
+    // each owned document's (list, position) occurrences, CSR layout:
+    // pass 0 sizes the rows, pass 1 fills them
+    val start = new Array[Int](docs + 1)
+    var occList: Array[Int] = null
+    var occPos: Array[Int] = null
+    for (pass <- 0 to 1) {
+      var c = 0
+      while (c < lists.length) {
+        val l = locs(c)
+        var i = 0
+        while (i < l.length) {
+          if (if (cross) i < lists(c).split else owner(lists(c).ids(i), parts) == q) {
+            if (pass == 0) start(l(i) + 1) += 1
+            else {
+              val k = start(l(i))
+              occList(k) = c; occPos(k) = i
+              start(l(i)) = k + 1
+            }
+          }
+          i += 1
+        }
+        c += 1
+      }
+      if (pass == 0) {
+        var a = 0
+        while (a < docs) { start(a + 1) += start(a); a += 1 }
+        occList = new Array[Int](start(docs))
+        occPos = new Array[Int](start(docs))
+      } else { // the fill advanced each row start to the next row's
+        System.arraycopy(start, 0, start, 1, docs)
+        start(0) = 0
+      }
+    }
+    val acc = new Array[Long](docs)
+    val touched = new Array[Int](docs)
+    Iterator.range(0, docs).filter(a => start(a + 1) > start(a)).flatMap { a =>
+      var nt = 0
+      var o = start(a)
+      while (o < start(a + 1)) {
+        val c = lists(occList(o))
+        val l = locs(occList(o))
+        val i = occPos(o)
+        val m = c.mult
+        var j = if (cross) c.split else i + 1
+        if (m == null) {
+          while (j < l.length) {
+            val b = l(j)
+            if (acc(b) == 0) { touched(nt) = b; nt += 1 }
+            acc(b) += 1
+            j += 1
+          }
+        } else {
+          val ma = m(i).toLong
+          while (j < l.length) {
+            val b = l(j)
+            if (acc(b) == 0) { touched(nt) = b; nt += 1 }
+            acc(b) += ma * m(j)
+            j += 1
+          }
+        }
+        o += 1
+      }
+      val na = nOf(a)
+      val out = ArrayBuffer.empty[Row]
+      var t = 0
+      while (t < nt) {
+        val b = touched(t)
+        val nc = acc(b)
+        acc(b) = 0
+        val nb = nOf(b)
+        val d = na + nb - nc
+        // d == 0 only under multiset rows: left for the SQL division
+        if (d == 0 || nc.toDouble / d.toDouble >= minSim)
+          out += Row(idOf(a), idOf(b), nc, na, nb)
+        t += 1
+      }
+      out
+    }
+  }
+
+  /** Open-addressing Long → Int map for non-negative values. */
+  private final class LongIntMap {
+    private var keys = new Array[Long](64)
+    private var vals = Array.fill(64)(-1)
+    private var used = 0
+
+    private def slot(k: Long, mask: Int): Int = (mix(k) & mask).toInt
+
+    /** The value of `k`, inserting `v` when `k` is absent. */
+    def getOrInsert(k: Long, v: Int): Int = {
+      val mask = keys.length - 1
+      var s = slot(k, mask)
+      while (vals(s) >= 0) {
+        if (keys(s) == k) return vals(s)
+        s = (s + 1) & mask
+      }
+      keys(s) = k; vals(s) = v; used += 1
+      if (used * 2 > keys.length) grow()
+      v
+    }
+
+    private def grow(): Unit = {
+      val (ok, ov) = (keys, vals)
+      keys = new Array[Long](ok.length * 2)
+      vals = Array.fill(ok.length * 2)(-1)
+      val mask = keys.length - 1
+      for (i <- ok.indices if ov(i) >= 0) {
+        var s = slot(ok(i), mask)
+        while (vals(s) >= 0) s = (s + 1) & mask
+        keys(s) = ok(i); vals(s) = ov(i)
+      }
+    }
   }
 }

@@ -54,6 +54,28 @@ class IncrementalIndexSpec extends AnyFunSuite {
     assert(scores.contains(7L) && !scores.contains(5L))
   }
 
+  test("a rebuild after a sync sees the new base while the previous eager index is still persisted") {
+    val base = java.nio.file.Files.createTempDirectory("incidx").toString + "/tb"
+    IncrementalIndex.syncTokenBase(spark, base, v1.toDF("doc_id", "text"),
+      "doc_id", "text")
+    val before = IncrementalIndex.index(spark, base, "doc_id", eager = true)
+    assert(Search.scoreWith(before, Seq("zanzibar")).count() === 0)
+    // doc 3 gains a marker term; the old index is NOT released
+    IncrementalIndex.syncTokenBase(spark, base,
+      Seq((3L, "query planner joins zanzibar tables")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val after = IncrementalIndex.index(spark, base, "doc_id", eager = true)
+    val scores = Search.scoreWith(after, Seq("zanzibar"))
+      .as[(Long, Double)].collect().toMap
+    assert(scores.keySet === Set(3L))
+    val v2 = v1.map { case (id, t) =>
+      if (id == 3L) (id, "query planner joins zanzibar tables") else (id, t) }
+    assert(impacts(after) ===
+      impacts(Search.buildIndex(v2.toDF("doc_id", "text"), "doc_id", "text")))
+    Seq(before, after).foreach(i =>
+      Seq(i.idx, i.dls, i.stats, i.impacts).foreach(_.unpersist()))
+  }
+
   test("index() without a prior sync fails loudly") {
     intercept[IllegalStateException](
       IncrementalIndex.index(spark, "/tmp/graft-no-such-base", "doc_id"))
