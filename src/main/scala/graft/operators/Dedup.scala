@@ -51,7 +51,7 @@ import graft.functions.{NativeText, Sketch, TextFunctions, VectorFunctions}
   *    fingerprint set, append-only rows + a MERGEABLE Bloom row.
   *
   * '''Document, near-dup''':
-  *  - one-shot candidates: [[jaccardPairs]]/[[jaccardPairsFromIndex]]
+  *  - one-shot candidates: [[jaccardPairsFromIndex]]
   *    (q17), df-capped [[jaccardPairsCappedFromIndex]] (q152),
   *    self-sizing [[jaccardPairsAutoFromIndex]] (q151),
   *    [[minhashCandidates]] (q18) and [[minhashCandidatesAuto]]
@@ -178,24 +178,10 @@ object Dedup {
     base.select(col(idCol), explode(NativeText.shinglesOf(col("_toks"), n)).as("shingle"))
 
   /** Candidate pairs (a < b) sharing >= 1 shingle, with exact Jaccard
-    * similarity over the distinct-shingle sets, filtered to >= minSim.
-    * |A ∩ B|, |A| and |B| come from the posting-list pair-count kernel
-    * (see [[jaccardPairsFromIndex]]).
-    *
-    * NOTE (r18 review pass 3): this convenience face caches the
-    * transient shingle index and has NO release path — the cache pins
-    * until driver GC, the kmeansIvf class of pin. One-shot callers are
-    * fine; anything long-lived should build the index once
-    * ([[CorpusArtifacts.shingleIndex]] — the persisted ingest
-    * artifact) and call [[jaccardPairsFromIndex]], owning the
-    * lifecycle. */
-  def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, minSim: Double = 0.5): DataFrame =
-    jaccardPairsFromIndex(shingleIndex(df, idCol, textCol, n).cache(),
-      idCol, minSim)
-
-  /** Same, over a prebuilt (persisted) (id, shingle) inverted index —
-    * the ingest-artifact path ([[CorpusArtifacts.shingleIndex]]).
+    * similarity over the shingle sets, filtered to >= minSim, over a
+    * prebuilt (persisted) (id, shingle) inverted index — the
+    * ingest-artifact path ([[CorpusArtifacts.shingleIndex]], or a
+    * caller-owned [[shingleIndex]]).
     * Output: (id_a, id_b, n_common, jaccard) with id_a < id_b.
     *
     * The pairs are counted by [[PostingPairs]], not by a self-join on

@@ -237,8 +237,8 @@ object History {
     }
 
   /** asOf-prunable storage layout: the history partitioned by each
-    * version's CLOSING DAY (`_vt_day` = date of valid_to, 'open' for
-    * current rows). [[asOfStored]] reads over this layout prune every
+    * version's CLOSING DAY (`_vt_day` = UTC date of valid_to, 'open'
+    * for current rows). [[asOfStored]] reads over this layout prune every
     * partition that closed wholly before the cut's day — the
     * partition-level twin of the [[asOf]] row filter (which still
     * applies to the survivors: same-day closings are row-filtered).
@@ -246,9 +246,15 @@ object History {
     * versions churn faster partitions by the finer unit with the
     * same shape. */
   def writeForAsOf(history: DataFrame, path: String): Unit =
-    history.withColumn("_vt_day",
-        coalesce(date_format(col("valid_to"), "yyyy-MM-dd"), lit("open")))
+    history.withColumn("_vt_day", coalesce(utcDay(col("valid_to")), lit("open")))
       .write.mode("overwrite").partitionBy("_vt_day").parquet(path)
+
+  /** The UTC calendar day of an instant, as 'yyyy-MM-dd' — a function
+    * of the instant alone, so a layout written under one session
+    * timezone prunes correctly when read under another. */
+  private def utcDay(ts: Column): Column =
+    date_from_unix_date(floor(unix_micros(ts) / 86400000000L).cast("int"))
+      .cast("string")
 
   /** Partition-pruned point-in-time read over a [[writeForAsOf]]
     * layout — the [[asOf]] law with the pruning predicate on the
@@ -261,7 +267,7 @@ object History {
       at: Column): DataFrame =
     spark.read.parquet(path)
       .where((col("_vt_day") === "open" ||
-          col("_vt_day") >= date_format(at, "yyyy-MM-dd")) &&
+          col("_vt_day") >= utcDay(at)) &&
         col("valid_from") <= at &&
         (col("valid_to").isNull || col("valid_to") > at))
       .drop("_vt_day")

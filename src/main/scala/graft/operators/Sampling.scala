@@ -83,8 +83,9 @@ object Sampling {
     * exact integer min), so every fraction is a deterministic IEEE
     * expression both engines reproduce bit-identically; α = 0.5 maps
     * to sqrt (exactly rounded) rather than pow. Output: strataCol,
-    * n, fraction (rounded to 6 places). Plan: one tiny groupBy + a
-    * broadcast 1-row min join. */
+    * n, fraction (rounded to 6 places). Plan: one tiny groupBy, then
+    * one single-partition collect_list of the k (stratum, n) rows that
+    * is exploded back with n_min = array_min over the list — no join. */
   def temperatureFractions(df: DataFrame, strataCol: String,
       alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha in (0,1]: $alpha")
@@ -104,7 +105,10 @@ object Sampling {
     // 1.40 → 1.77 s on q187 and was reverted; this form differs: it
     // replaces the min+crossJoin subtree instead of adding a window
     // sort, and is measured in OPTIMIZATION_r22.md.)
-    val ratio = col("n_min").cast("double") / col("n").cast("double")
+    // `_c.n`, not the `n` alias defined beside it in the same select:
+    // that lateral-alias read fails when implicit lateral resolution
+    // is off (spark.sql.lateralColumnAlias.enableImplicitResolution)
+    val ratio = col("n_min").cast("double") / col("_c.n").cast("double")
     val f = if (exp == 0.5) sqrt(ratio) else pow(ratio, exp)
     counts
       .agg(collect_list(struct(col(strataCol), col("n"))).as("_cs"))

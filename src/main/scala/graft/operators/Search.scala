@@ -22,20 +22,6 @@ import graft.functions.TextFunctions
   */
 object Search {
 
-  /** Inverted index: (id, token, tf) from a text column. */
-  def invertedIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Partitioning.spread(df.select(col(idCol), col(textCol)))
-      .select(col(idCol),
-        explode(TextFunctions.bm25Tokens(col(textCol))).as("token"))
-      .groupBy(col(idCol), col("token"))
-      .agg(count(lit(1)).as("tf"))
-
-  /** Per-doc token length (BM25 |d|). */
-  def docLengths(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Partitioning.spread(df.select(col(idCol), col(textCol)))
-      .select(col(idCol),
-        size(TextFunctions.bm25Tokens(col(textCol))).as("dl"))
-
   /** Precomputed lexical index — the ingest-time artifact
     * (contextual_retrieval_schema.sql:33 bm25_statistics analogue).
     * Build once per corpus version, score many queries against it.
@@ -185,10 +171,10 @@ object Search {
     val v = vec.select(col(idCol), col("score").as("_v"))
     // cached: the max() normalization branch would otherwise re-run
     // the whole lexical scoring subtree a second time. NO release
-    // path (r18 review pass 4) — the pin lasts until driver GC, like
-    // jaccardPairs' transient index; result sets are top-k-sized so
-    // the pinned footprint is bounded, but a long-lived service
-    // should pass an already-materialized `lex` and own its lifecycle.
+    // path (r18 review pass 4) — the pin lasts until driver GC;
+    // result sets are top-k-sized so the pinned footprint is bounded,
+    // but a long-lived service should pass an already-materialized
+    // `lex` and own its lifecycle.
     val l = lex.select(col(idCol), col("score").as("_l")).cache()
     val maxLex = broadcast(l.agg(max(col("_l")).as("_lmax")))
     v.join(l, Seq(idCol), "full_outer")

@@ -198,6 +198,30 @@ class HistorySpec extends AnyFunSuite {
       "at t=20 version A [10,20) has ended; B [20,∞) is live; key 2 not yet")
   }
 
+  test("asOfStored equals asOf when the layout is written under one " +
+      "session timezone and read under another") {
+    val tmp = java.nio.file.Files.createTempDirectory("asoftz").toString
+    def at(s: String) = Timestamp.from(java.time.Instant.parse(s))
+    // A is valid [20:00, 03:00 next day) UTC; under Los Angeles time
+    // its valid_to falls on the earlier calendar day (19:00)
+    val h = run(Seq(
+        (1L, at("2024-01-01T20:00:00Z"), 0L, "A"),
+        (1L, at("2024-01-02T03:00:00Z"), 1L, "B"))
+      .toDF("key", "t", "seq", "payload"))
+    val cut = lit(at("2024-01-02T01:00:00Z"))
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      History.writeForAsOf(h, s"$tmp/h")
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+      val stored = History.asOfStored(spark, s"$tmp/h", cut)
+        .select("key", "payload").as[(Long, String)].collect().toSeq
+      assert(stored === History.asOf(h, cut)
+        .select("key", "payload").as[(Long, String)].collect().toSeq)
+      assert(stored === Seq((1L, "A")))
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
   test("diffSnapshots: added / changed / silent-equal / removed-on-" +
       "backwards-diff, null-safe on payload and key") {
     val h = run(log(

@@ -226,13 +226,16 @@ class DedupSpec extends AnyFunSuite {
     assert(!got.exists(p => p._1 == 1L && p._2 == 3L))
   }
 
-  test("jaccardPairs finds near-duplicates, not unrelated docs") {
+  test("jaccardPairsFromIndex over a shingleIndex finds near-duplicates, " +
+      "not unrelated docs") {
     val a = "alpha beta gamma delta epsilon zeta eta theta"
     val b = "alpha beta gamma delta epsilon zeta eta iota" // 1 token differs
     val c = "completely different words entirely unrelated content here now"
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val pairs = Dedup.jaccardPairs(df, "doc_id", "text", 3, 0.2)
+    val idx = Dedup.shingleIndex(df, "doc_id", "text", 3).cache()
+    val pairs = Dedup.jaccardPairsFromIndex(idx, "doc_id", 0.2)
       .select($"id_a", $"id_b").as[(Long, Long)].collect()
+    idx.unpersist()
     assert(pairs.toSeq === Seq((1L, 2L)))
   }
 

@@ -113,6 +113,21 @@ class SamplingSpec extends AnyFunSuite {
     }
   }
 
+  test("temperature fractions resolve without implicit lateral " +
+      "column aliases") {
+    val key = "spark.sql.lateralColumnAlias.enableImplicitResolution"
+    val prev = spark.conf.get(key)
+    val df = spark.range(300).toDF("id")
+      .withColumn("lang", when(col("id") < 200, "en").otherwise("ro"))
+    try {
+      spark.conf.set(key, "false")
+      val got = Sampling.temperatureFractions(df, "lang", 0.5)
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2)))
+        .toMap
+      assert(got === Map("ro" -> ((100L, 1.0)), "en" -> ((200L, 0.707107))))
+    } finally spark.conf.set(key, prev)
+  }
+
   test("temperatureSample flattens the mix toward n^alpha and stays " +
       "a pure function of (salt, id)") {
     val df = spark.range(3000).toDF("id")
