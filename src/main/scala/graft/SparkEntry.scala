@@ -180,7 +180,6 @@ object SparkEntry {
   def prepareArtifacts(s: SparkSession, dir: String): Unit = {
     CorpusArtifacts.buildAll(corpusKey(s, dir),
       t(s, dir, "documents"), "doc_id", "text", 3)
-    docsShingles(s, dir).count()
     // the round-17 bench cells' ingest-written artifacts (the NB
     // scored frame q215/q221 share, the decontaminated frame and the
     // clean-side NB scores q219 reads) — materialized here so the
@@ -372,7 +371,11 @@ object SparkEntry {
   /** MinHash + LSH candidate pairs (16 hashes, 4 bands × 4 rows) —
     * signatures derive from the stored token artifact (r21; same
     * output, no per-query re-tokenization — the q17/q23 artifact
-    * methodology). */
+    * methodology). This is also the ONE definition of the candidate
+    * graph the grouping gates (q176, q223) walk and the q225 audit
+    * reads: q176/q223 sharing an oracle verbatim is only sound while
+    * they walk the IDENTICAL graph (a parameter drifting in one would
+    * break the equal-fixpoint claim silently). */
   private def q18(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashCandidatesFromTokens(docsTokens(s, dir), "doc_id", 3, 16, 4)
 
@@ -3692,23 +3695,29 @@ object SparkEntry {
       0.2, 64L)
 
   /** The self-sizing embedding near-dup path in the gate
-    * (Dedup.embeddingNearDupLshAuto): the oracle COMPUTES the sizing
-    * law over the corpus count (r20 — previously it hardcoded q72's
-    * (3, 12), which only holds at the 500-vector decade), so the
-    * gate is hash-checked at every SF: 3 bits at 500 vectors, 5 at
-    * sf0.1's 2000. */
-  private def q153(s: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingNearDupLshAuto(t(s, dir, "embeddings"), "vec_id",
-      "embedding", 64, 0.4)
+    * (Dedup.embeddingNearDupLsh at the width Dedup.lshSizing picks
+    * from the corpus count): the oracle COMPUTES the sizing law over
+    * the same count (r20 — previously it hardcoded q72's (3, 12),
+    * which only holds at the 500-vector decade), so the gate is
+    * hash-checked at every SF: 3 bits at 500 vectors, 5 at sf0.1's
+    * 2000. */
+  private def q153(s: SparkSession, dir: String): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    Dedup.embeddingNearDupLsh(emb, "vec_id", "embedding", 64, 0.4,
+      Dedup.lshSizing(emb.count(), 12, 0.5), 12)
+  }
 
-  /** The self-sizing MinHash candidate path in the gate
-    * (Dedup.minhashCandidatesAuto): the oracle computes the sizing
-    * law (floor 4) over the documents count — q18's (4 rows × 4
-    * bands) at the 500-doc decade, 5 rows at sf0.1's 5000 (r20; the
-    * hardcoded twin diverged there). */
-  private def q154(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashCandidatesAuto(t(s, dir, "documents"), "doc_id",
-      "text")
+  /** The self-sizing MinHash candidate path in the gate (q18's
+    * candidates at 4 bands of the rows-per-band Dedup.lshSizing picks
+    * at p = 0.5, floor 4): the oracle computes the same law over the
+    * documents count — q18's (4 rows × 4 bands) at the 500-doc
+    * decade, 5 rows at sf0.1's 5000 (r20; the hardcoded twin
+    * diverged there). */
+  private def q154(s: SparkSession, dir: String): DataFrame = {
+    val toks = docsTokens(s, dir)
+    val rows = Dedup.lshSizing(toks.count(), 4, 0.5, floor = 4)
+    Dedup.minhashCandidatesFromTokens(toks, "doc_id", 3, 4 * rows, 4)
+  }
 
   /** The main_minimal variant entrypoint in the gate
     * (app/main_minimal.py via MainMinimal): root/health constants,
@@ -4377,19 +4386,6 @@ object SparkEntry {
       "embedding", updated, reclusterThreshold = 0.0)
   }
 
-  /** Near-dup GROUPS in the gate (Dedup.connectedComponents over the
-    * q18 MinHash candidate pairs): every document labeled with the
-    * smallest id reachable through the pair graph — the
-    * keep-one-representative-per-cluster step of a training-data
-    * dedup pipeline; singletons are their own component. */
-  /** The q18 MinHash candidate pairs both grouping gates walk — ONE
-    * definition, because q176/q223 sharing an oracle verbatim is only
-    * sound while they walk the IDENTICAL graph (a parameter drifting
-    * in one would break the equal-fixpoint claim silently). */
-  private def neardupPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashCandidates(t(s, dir, "documents"),
-      "doc_id", "text", 3, 16, 4)
-
   /** The q176 component labels as a shared ingest artifact — ONE
     * MinHash walk per corpus for q176 and its group post-processing
     * consumers (q224 keep-best, q226 census); the key pins the
@@ -4400,10 +4396,15 @@ object SparkEntry {
     CorpusArtifacts.neardupComponents(s"${corpusKey(s, dir)}#cc:3-16-4",
       Dedup.connectedComponents(
           t(s, dir, "documents").select(col("doc_id")), "doc_id",
-          neardupPairs(s, dir), "id_a", "id_b")
+          q18(s, dir), "id_a", "id_b")
         .select(col("id").as("doc_id"), col("component"),
           col("is_representative")))
 
+  /** Near-dup GROUPS in the gate (Dedup.connectedComponents over the
+    * q18 MinHash candidate pairs): every document labeled with the
+    * smallest id reachable through the pair graph — the
+    * keep-one-representative-per-cluster step of a training-data
+    * dedup pipeline; singletons are their own component. */
   private def q176(s: SparkSession, dir: String): DataFrame =
     neardupComponentsOf(s, dir)
 
@@ -4416,7 +4417,7 @@ object SparkEntry {
   private def q223(s: SparkSession, dir: String): DataFrame =
     Dedup.connectedComponentsStar(
         t(s, dir, "documents").select(col("doc_id")), "doc_id",
-        neardupPairs(s, dir), "id_a", "id_b")
+        q18(s, dir), "id_a", "id_b")
       .select(col("id").as("doc_id"), col("component"),
         col("is_representative"))
 
@@ -4478,16 +4479,17 @@ object SparkEntry {
   /** NULL-text components (the q176 shape over the adversarial
     * corpus): NULL/empty/stopword-only docs have no shingles, so they
     * must resolve as SINGLETONS on both engines — the Spark side via
-    * lshBuckets' zero-signature guard, the oracle via unnest of an
-    * empty/NULL shingle list producing no signature rows. Before the
-    * r18 guard, every zero-shingle doc shared one md5("b|") bucket
-    * and the whole degenerate class fused into one spurious
-    * component. */
+    * lshBucketsFromTokens' zero-signature guard, the oracle via
+    * unnest of an empty/NULL shingle list producing no signature
+    * rows. Before the r18 guard, every zero-shingle doc shared one
+    * md5("b|") bucket and the whole degenerate class fused into one
+    * spurious component. */
   private def q227(s: SparkSession, dir: String): DataFrame =
     Dedup.connectedComponents(
         nullTextCorpus(s, dir).select(col("doc_id")), "doc_id",
-        Dedup.minhashCandidates(nullTextCorpus(s, dir), "doc_id",
-          "text", 3, 16, 4),
+        Dedup.minhashCandidatesFromTokens(
+          Search.tokenBase(nullTextCorpus(s, dir), "doc_id", "text"),
+          "doc_id", 3, 16, 4),
         "id_a", "id_b")
       .select(col("id").as("doc_id"), col("component"),
         col("is_representative"))
@@ -4574,7 +4576,7 @@ object SparkEntry {
     val splits = assignDocSplit(
         t(s, dir, "documents").select(col("doc_id")))
       .select(col("doc_id"), col("split"))
-    Dedup.crossGroupPairs(neardupPairs(s, dir), "id_a", "id_b",
+    Dedup.crossGroupPairs(q18(s, dir), "id_a", "id_b",
       splits, "doc_id", "split")
   }
 
@@ -4588,8 +4590,9 @@ object SparkEntry {
   /** THE per-document split law — one definition (r17 review pass 5:
     * the (salt, fractions) triple was inlined at four sites, so a
     * q177 change would leave q225 auditing a split nobody assigns,
-    * silently — the neardupPairs drift argument again). q177 assigns
-    * it, q225 audits it, both oracles replay [[splitCaseSql]]. */
+    * silently — the q18 candidate-graph drift argument again). q177
+    * assigns it, q225 audits it, both oracles replay
+    * [[splitCaseSql]]. */
   private val SplitSalt = "split1"
   private val SplitTrainFrac = 0.7
   private val SplitValFrac = 0.15
@@ -4625,12 +4628,9 @@ object SparkEntry {
     * benchmark document is flagged — the train-test overlap check a
     * training pipeline runs before a data release. */
   private def q178(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val train = Dedup.shingleIndex(
-      docs.where(col("doc_id") % 5 =!= 0), "doc_id", "text", 3)
-    val bench = Dedup.shingleIndex(
-      docs.where(col("doc_id") % 5 === 0), "doc_id", "text", 3)
-    Dedup.crossJaccardPairs(train, "doc_id", bench, "doc_id", 0.2)
+    val idx = docsShingles(s, dir)
+    Dedup.crossJaccardPairs(idx.where(col("doc_id") % 5 =!= 0), "doc_id",
+      idx.where(col("doc_id") % 5 === 0), "doc_id", 0.2)
   }
 
   /** Gopher-style quality signals + keep decision per document
@@ -5228,11 +5228,13 @@ object SparkEntry {
     * (q18's law), so the deterministic LSH misses are REPRODUCED. */
   private def q203(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val prior = docs.where(col("doc_id") < 250 || col("doc_id") % 5 === 0)
+    val prior = Search.tokenBase(
+      docs.where(col("doc_id") < 250 || col("doc_id") % 5 === 0),
+      "doc_id", "text")
     Dedup.nearDupAgainstSnapshot(
       docs.where(col("doc_id") >= 250), "doc_id", "text",
-      Dedup.lshBuckets(prior, "doc_id", "text"), "doc_id",
-      Dedup.shingleIndex(prior, "doc_id", "text"), minSim = 0.5)
+      Dedup.lshBucketsFromTokens(prior, "doc_id"), "doc_id",
+      Dedup.shingleIndexFromTokens(prior, "doc_id"), minSim = 0.5)
   }
 
   /** The tokenize-then-pack tail of a data release (Bpe.encode →
@@ -10047,7 +10049,7 @@ ORDER BY g.score DESC, doc_id ASC LIMIT 100"""),
 
   /** q154: the self-sizing twin — rows-per-band computed by the
     * sizing law over the corpus count (floor 4, the Scala default),
-    * exactly Dedup.minhashCandidatesAuto's geometry at EVERY SF
+    * exactly the width q154 passes at EVERY SF
     * (5 rows × 4 bands at the sf0.1 decade where the fixed twin's
     * 4×4 diverged). */
   private def minhashLshSizedOracleSql: String =
@@ -10262,7 +10264,7 @@ ORDER BY g.score DESC, doc_id ASC LIMIT 100"""),
     * hyperplane signatures in 12 bands of `bits`, candidates verified
     * with exact cosine. `szb` selects one row exposing `bits` — the
     * fixed face pins 3; q153's COMPUTES the sizing law over the
-    * corpus count (what embeddingNearDupLshAuto counts), so the gate
+    * corpus count (what q153 counts), so the gate
     * holds at every SF (5 bits at the sf0.1 decade where the
     * hardcoded twin diverged — r19 verdict item 2). */
   private def embedDedupLshOracleSqlWith(szb: String): String =
@@ -11067,7 +11069,7 @@ ORDER BY g.score DESC, doc_id ASC LIMIT 100"""),
        |SELECT d.doc_id, coalesce(hx.sh, '0000000000000000') AS simhash
        |FROM documents d LEFT JOIN hx ON d.doc_id = hx.doc_id""".stripMargin
 
-  /** BM25 oracle: identical formula/op-order as Search.bm25. */
+  /** BM25 oracle: identical formula/op-order as Search.scoreWith. */
   private def bm25OracleSql(limit: Int): String = {
     val terms = bm25QueryTerms.map(q => s"'$q'").mkString(", ")
     s"""WITH idx AS (SELECT doc_id, token, COUNT(*) AS tf FROM (

@@ -33,8 +33,9 @@ object CorpusArtifacts {
   private final class DfMemo {
     private val m = new ConcurrentHashMap[String, DataFrame]()
     // eager = materialize the persisted frame inside the build (the
-    // ingest-phase posture buildAll uses); the count runs under the
-    // key's compute lock, exactly like the pre-r20 computeIfAbsent
+    // ingest artifacts: tokens, shingles, fingerprints); the count runs
+    // under the key's compute lock, exactly like the pre-r20
+    // computeIfAbsent
     def get(key: String, build: => DataFrame,
         eager: Boolean = false): DataFrame =
       m.compute(key, (_, cur) =>
@@ -44,10 +45,6 @@ object CorpusArtifacts {
           if (eager) df.count()
           df
         })
-    def alive(key: String): Boolean = {
-      val cur = m.get(key)
-      cur != null && !cur.sparkSession.sparkContext.isStopped
-    }
     def clear(): Unit = {
       m.values.forEach { df =>
         if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
@@ -60,34 +57,33 @@ object CorpusArtifacts {
   private val shingleCache = new DfMemo
   private val winnowCache = new DfMemo
 
-  /** Explicit ingest-phase entry: build BOTH artifacts for a corpus
-    * from ONE persisted tokenization pass (tokenizing dominates both
-    * builds; at 100 TB this halves the ingest scans). Lazy per-artifact
-    * entries below stay independent — a BM25-only workload never pays
-    * for a shingle index it didn't ask for.
+  /** Explicit ingest-phase entry: build every lexical artifact of a
+    * corpus — the BM25 index, the shingle index and the fingerprints —
+    * through the same accessors the queries use. Both indexes derive
+    * from ONE persisted tokenization pass ([[tokens]]; tokenizing
+    * dominates both builds), whichever is asked for first, so a
+    * BM25-only workload never pays for a shingle index it didn't ask
+    * for and never tokenizes twice either.
     *
     * The token frame itself STAYS an artifact (r21): the reference
     * stores `bm25_tokens` on every chunk row — tokens are ingest
     * output, not per-query work — and the MinHash faces re-derive
-    * their signatures from exactly this frame ([[tokens]]), so
-    * keeping it persisted removes their per-query re-tokenization.
+    * their signatures from exactly this frame, so keeping it
+    * persisted removes their per-query re-tokenization.
     * (~tokens-sized memory, the same class as the shingle index.) */
   def buildAll(key: String, df: => DataFrame, idCol: String,
       textCol: String, n: Int): Unit = {
-    val shKey = s"$key#$n"
-    if (bm25Alive(key) && shingleCache.alive(shKey) &&
-      tokenCache.alive(key) && fingerprintCache.alive(key)) return
-    val base = tokens(key, df, idCol, textCol)
-    bm25Compute(key, Search.buildIndexFromTokens(base, idCol, eager = true))
-    shingleCache.get(shKey,
-      Dedup.shingleIndexFromTokens(base, idCol, n), eager = true)
+    bm25Index(key, df, idCol, textCol)
+    shingleIndex(key, df, idCol, textCol, n)
     fingerprints(key, df, idCol, textCol)
   }
 
   /** The tokenized corpus ((id, dl, _toks) — [[Search.tokenBase]]),
     * persisted: the reference's stored `bm25_tokens` column as a
     * frame. Every token-consuming artifact/query (BM25 build, shingle
-    * build, MinHash signatures) derives from this one pass. */
+    * build, MinHash signatures) derives from this one pass; the
+    * memo is keyed by the corpus key alone, so every caller of a key
+    * must pass the same corpus and columns. */
   def tokens(key: String, df: => DataFrame, idCol: String,
       textCol: String): DataFrame =
     tokenCache.get(key, Search.tokenBase(df, idCol, textCol), eager = true)
@@ -108,29 +104,27 @@ object CorpusArtifacts {
 
   private val fingerprintCache = new DfMemo
 
-  /** Bm25Index entries carry four persisted frames, so they get the
-    * same session validation as [[DfMemo]] via the index frame. */
-  private def bm25Alive(key: String): Boolean = {
-    val cur = bm25Cache.get(key)
-    cur != null && !cur.idx.sparkSession.sparkContext.isStopped
-  }
-  private def bm25Compute(key: String, build: => Search.Bm25Index): Search.Bm25Index =
-    bm25Cache.compute(key, (_, cur) =>
-      if (cur != null && !cur.idx.sparkSession.sparkContext.isStopped) cur
-      else build)
-
-  /** BM25 index (inverted index, doc lengths, corpus stats), persisted.
-    * `key` identifies the corpus version — at cluster scale the ingest
-    * run id; here the sf directory. Per-key compute: cache hits
-    * never block behind another corpus's build. */
+  /** BM25 index (inverted index, doc lengths, corpus stats), built
+    * eagerly from [[tokens]] and persisted. `key` identifies the
+    * corpus version — at cluster scale the ingest run id; here the sf
+    * directory. Per-key compute: cache hits never block behind
+    * another corpus's build. Bm25Index entries carry four persisted
+    * frames, so they get the same session validation as [[DfMemo]]
+    * via the index frame. */
   def bm25Index(key: String, df: => DataFrame, idCol: String,
       textCol: String): Search.Bm25Index =
-    bm25Compute(key, Search.buildIndex(df, idCol, textCol, eager = true))
+    bm25Cache.compute(key, (_, cur) =>
+      if (cur != null && !cur.idx.sparkSession.sparkContext.isStopped) cur
+      else Search.buildIndexFromTokens(tokens(key, df, idCol, textCol),
+        idCol, eager = true))
 
-  /** Exploded (id, shingle) inverted index, persisted. */
+  /** Exploded (id, shingle) inverted index, built eagerly from
+    * [[tokens]] and persisted. */
   def shingleIndex(key: String, df: => DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame =
-    shingleCache.get(s"$key#$n", Dedup.shingleIndex(df, idCol, textCol, n))
+    shingleCache.get(s"$key#$n",
+      Dedup.shingleIndexFromTokens(tokens(key, df, idCol, textCol), idCol, n),
+      eager = true)
 
   /** Exploded (id, fp) winnowed-fingerprint index, persisted — the
     * span-pair analogue of [[shingleIndex]] (the per-row winnowing

@@ -32,8 +32,11 @@ import graft.functions.{NativeText, Sketch, TextFunctions, VectorFunctions}
   *
   * ==The dedup operator matrix (granularity × posture)==
   *
-  * The r19 verdict asked for this index (item 6): ~20 faces span four
-  * granularities and three postures; pick the cell, then the face.
+  * One face per operator: each takes the stored artifact its law
+  * reads (the fingerprint frame, the token frame, the shingle index)
+  * and its sizing as plain parameters, so a caller that owns the
+  * artifact never pays a second tokenization, and a caller that wants
+  * corpus-sized LSH computes [[lshSizing]] once and passes the width.
   * "Gate" names the DuckDB-oracle query pinning the law (specs pin
   * the rest). Merge semantics matter at the snapshot tier: an
   * owner/min merge is EXACT OVER ANY SPLIT of the corpus (min is
@@ -42,24 +45,27 @@ import graft.functions.{NativeText, Sketch, TextFunctions, VectorFunctions}
   * folded exactly once; replays double-count).
   *
   * '''Document, exact content''':
-  *  - one-shot: [[exact]] (q15), [[dropExactDuplicates]] (inside the
-  *    q187 pipeline), [[exactStreaming]] (the watermarked streaming
-  *    twin).
+  *  - one-shot: [[exactFromFingerprints]] over [[fingerprintFrame]]
+  *    (q15), [[dropExactDuplicates]] (inside the q187 pipeline),
+  *    [[exactStreaming]] (the watermarked streaming twin).
   *  - against a stored snapshot: [[newAgainstSnapshot]] (q197's law),
   *    [[newAgainstSnapshotBloom]] (the Bloom-pruned steady state,
   *    q197), [[releaseDiff]] (q218). Snapshot artifact: the
   *    fingerprint set, append-only rows + a MERGEABLE Bloom row.
   *
   * '''Document, near-dup''':
-  *  - one-shot candidates: [[jaccardPairsFromIndex]]
-  *    (q17), df-capped [[jaccardPairsCappedFromIndex]] (q152),
-  *    self-sizing [[jaccardPairsAutoFromIndex]] (q151),
-  *    [[minhashCandidates]] (q18) and [[minhashCandidatesAuto]]
-  *    (q154), [[simhashHammingCandidates]] (q216),
+  *  - artifacts: [[shingleIndexFromTokens]] and
+  *    [[lshBucketsFromTokens]] over a [[Search.tokenBase]] frame
+  *    ([[CorpusArtifacts.tokens]] when it is stored), [[winnowIndex]],
+  *    [[bandedBuckets]].
+  *  - one-shot candidates: [[jaccardPairsFromIndex]] (q17), df-capped
+  *    [[jaccardPairsCappedFromIndex]] (q152),
+  *    [[minhashCandidatesFromTokens]] (q18; q154 at the width
+  *    [[lshSizing]] picks), [[simhashHammingCandidates]] (q216),
   *    [[embeddingNearDup]] (exact baseline, q20) /
-  *    [[embeddingNearDupLsh]] (q72) / [[embeddingNearDupLshAuto]]
-  *    (q153); SemDeDup [[semDedup]] / [[semDedupVerdicts]] (q192) /
-  *    [[semDedupVerdictsLsh]] / [[semDedupVerdictsLshAuto]] (q199).
+  *    [[embeddingNearDupLsh]] (q72; q153 at the sized width);
+  *    SemDeDup [[semDedup]] / [[semDedupVerdicts]] (q192) /
+  *    [[semDedupVerdictsLsh]] (q199).
   *  - group post-processing: [[connectedComponents]] (q176) /
   *    [[connectedComponentsStar]] (q223) / [[connectedComponentsAuto]],
   *    [[dropNearDuplicates]] (spec-pinned), [[keepBestPerGroup]]
@@ -78,8 +84,7 @@ import graft.functions.{NativeText, Sketch, TextFunctions, VectorFunctions}
   *    (q234). Owner merge = min: EXACT over any split.
   *
   * '''Line (boilerplate)''':
-  *  - one-shot: [[removeBoilerplateLines]] (q211),
-  *    [[convictedBoilerplateLines]].
+  *  - one-shot: [[removeBoilerplateLines]] (q211).
   *  - snapshot: [[boilerplateLineCounts]] →
   *    [[mergeBoilerplateLineCounts]] → [[convictedFromCounts]] →
   *    [[removeBoilerplateLinesWithConvicted]] (q222). Count merge =
@@ -100,8 +105,8 @@ import graft.functions.{NativeText, Sketch, TextFunctions, VectorFunctions}
   */
 object Dedup {
 
-  /** The (id, fingerprint) projection [[exact]] aggregates — split out
-    * (r22) so it can persist as a corpus artifact
+  /** The (id, fingerprint) projection [[exactFromFingerprints]]
+    * aggregates — a corpus artifact
     * ([[CorpusArtifacts.fingerprints]]): the reference stores exactly
     * this content hash per row (notion_connector.py:624-634's
     * content_hash, row_indexer.rs's stored-fingerprint skip), so the
@@ -110,30 +115,28 @@ object Dedup {
       textCol: String): DataFrame =
     // spread before the fingerprint projection: normalization+md5 cost
     // dwarfs scan cost, and a small input arrives as ONE split — the
-    // whole pass would serialize on one core (the shingleIndex
+    // whole pass would serialize on one core (the Search.tokenBase
     // rationale; spread is a no-op on already-parallel inputs and on
     // streaming plans)
     Partitioning.spread(df.select(col(idCol), col(textCol)))
       .select(col(idCol), TextFunctions.fingerprint(col(textCol)).as("fingerprint"))
 
-  /** Exact duplicates by normalized-content fingerprint: one row per
-    * distinct fingerprint with the kept (minimum) id and the group size.
-    */
-  def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    exactFromFingerprints(fingerprintFrame(df, idCol, textCol), idCol)
-
-  /** Same, over a prebuilt (id, fingerprint) frame — the
-    * ingest-artifact path ([[CorpusArtifacts.fingerprints]]), exactly
-    * [[jaccardPairsFromIndex]]'s relationship to the shingle index. */
+  /** Exact duplicates by normalized-content fingerprint, over an
+    * (id, fingerprint) frame — [[fingerprintFrame]], or the stored
+    * [[CorpusArtifacts.fingerprints]] (exactly
+    * [[jaccardPairsFromIndex]]'s relationship to the shingle index):
+    * one row per distinct fingerprint with the kept (minimum) id and
+    * the group size. */
   def exactFromFingerprints(fps: DataFrame, idCol: String): DataFrame =
     fps.groupBy(col("fingerprint"))
       .agg(min(col(idCol)).as("kept_id"), count(lit(1)).as("n_dups"))
 
-  /** Row-preserving face of [[exact]]: keep the min-id row per
-    * normalized fingerprint, dropping the rest — as ONE pass (a
-    * fingerprint-keyed window min), so an expensive upstream (e.g. a
-    * quality-filter battery) is evaluated once, not once per side of
-    * a groupBy + semi-join. All input columns survive. */
+  /** Row-preserving face of [[exactFromFingerprints]]: keep the
+    * min-id row per normalized fingerprint, dropping the rest — as
+    * ONE pass (a fingerprint-keyed window min), so an expensive
+    * upstream (e.g. a quality-filter battery) is evaluated once, not
+    * once per side of a groupBy + semi-join. All input columns
+    * survive. */
   def dropExactDuplicates(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -160,20 +163,12 @@ object Dedup {
     else fp.dropDuplicates("fingerprint")
   }
 
-  /** Exploded inverted index: one row per (id, shingle).
-    * Tokens materialized as a column (single interpreted eval per row)
-    * and the stage spread across partitions — shingling cost dwarfs
-    * scan cost, so input-split parallelism is the wrong parallelism.
-    */
-  def shingleIndex(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
-    shingleIndexFromTokens(
-      Partitioning.spread(df.select(col(idCol), col(textCol)))
-        .withColumn("_toks", TextFunctions.bm25Tokens(col(textCol))),
-      idCol, n)
-
-  /** Shingle index from an existing (id, ..., _toks) token frame —
-    * lets CorpusArtifacts derive BM25 + shingle indexes from ONE
-    * tokenization pass over the corpus. */
+  /** Exploded inverted index: one row per (id, shingle), from an
+    * (id, ..., _toks) token frame — [[Search.tokenBase]], which
+    * spreads the tokenization over the partitions (shingling cost
+    * dwarfs scan cost, so input-split parallelism is the wrong
+    * parallelism), or the stored [[CorpusArtifacts.tokens]], from
+    * which the BM25 and shingle indexes both derive. */
   def shingleIndexFromTokens(base: DataFrame, idCol: String, n: Int = 3): DataFrame =
     base.select(col(idCol), explode(NativeText.shinglesOf(col("_toks"), n)).as("shingle"))
 
@@ -181,7 +176,7 @@ object Dedup {
     * similarity over the shingle sets, filtered to >= minSim, over a
     * prebuilt (persisted) (id, shingle) inverted index — the
     * ingest-artifact path ([[CorpusArtifacts.shingleIndex]], or a
-    * caller-owned [[shingleIndex]]).
+    * caller-owned [[shingleIndexFromTokens]]).
     * Output: (id_a, id_b, n_common, jaccard) with id_a < id_b.
     *
     * The pairs are counted by [[PostingPairs]], not by a self-join on
@@ -226,22 +221,6 @@ object Dedup {
   // kernel's cost is the replicated postings plus Σ df·(df−1)/2
   // in-memory increments, spread over the partitions by owner.
 
-  /** The 100 TB form of [[jaccardPairsFromIndex]]: frequent shingles
-    * (document frequency > `maxDf`) are dropped from CANDIDATE
-    * generation — they are the boilerplate n-grams whose posting
-    * lists make the self-join quadratic in corpus size (join mass =
-    * Σ df·(df−1)/2, dominated by the df tail) — and candidates then
-    * verify with an EXACT Jaccard over the full per-document shingle
-    * sets (array_intersect on collect_set arrays, O(|a|+|b|) per
-    * candidate).
-    *
-    * Precision is exact. Recall: a pair at jaccard ≥ s shares at
-    * least s/(1+s)·(|a|+|b|) shingles, so it is missed only when
-    * EVERY ONE of those is boilerplate (df > maxDf) — i.e. the
-    * documents consist of nothing but corpus-frequent n-grams.
-    * Size maxDf so the near-dup mass you care about keeps at least
-    * one sub-cap shingle; the measured knee on the synthetic corpus
-    * is in SCALING.md. */
   /** The df-cap candidate-generation law, shared by every capped
     * inverted-index pair join (shingle Jaccard, winnow span pairs):
     * df == 1 keys can never pair (the self-join discards the only
@@ -261,6 +240,22 @@ object Dedup {
     idx.join(broadcast(dfc), Seq(keyCol))
   }
 
+  /** The 100 TB form of [[jaccardPairsFromIndex]]: frequent shingles
+    * (document frequency > `maxDf`) are dropped from CANDIDATE
+    * generation — they are the boilerplate n-grams whose posting
+    * lists make the self-join quadratic in corpus size (join mass =
+    * Σ df·(df−1)/2, dominated by the df tail) — and candidates then
+    * verify with an EXACT Jaccard over the full per-document shingle
+    * sets (array_intersect on collect_set arrays, O(|a|+|b|) per
+    * candidate).
+    *
+    * Precision is exact. Recall: a pair at jaccard ≥ s shares at
+    * least s/(1+s)·(|a|+|b|) shingles, so it is missed only when
+    * EVERY ONE of those is boilerplate (df > maxDf) — i.e. the
+    * documents consist of nothing but corpus-frequent n-grams.
+    * Size maxDf so the near-dup mass you care about keeps at least
+    * one sub-cap shingle; the measured knee on the synthetic corpus
+    * is in SCALING.md. */
   def jaccardPairsCappedFromIndex(idx: DataFrame, idCol: String,
       minSim: Double, maxDf: Long): DataFrame = {
     val kept = cappedPostings(idx, "shingle", maxDf)
@@ -282,36 +277,11 @@ object Dedup {
         round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** The 100 TB form of [[jaccardPairsFromIndex]] with the df-cap
-    * applied AUTOMATICALLY once the corpus outgrows the exact plan:
-    * below `switchAt` documents the exact face runs, above it
-    * candidate generation switches to [[jaccardPairsCappedFromIndex]]
-    * at the measured cap (64; any FIXED cap makes the candidate mass
-    * linear in postings, Σdf·(df−1)/2 ≤ cap·P/2, so the cap is a
-    * recall knob, not an n-law — see the capped scaladoc's recall
-    * bound). The switch point was measured against the self-join the
-    * exact face used to run (18.1 s vs 6.5 s capped at 50k docs,
-    * 32 cores); the posting-list kernel is much cheaper there
-    * (SCALING.md, the posting-list kernel entry), so the exact side
-    * of the switch is conservative until it is re-measured.
-    *
-    * The document count, when not supplied by the caller (who often
-    * has it), is estimated with one map-side-combinable HLL pass over
-    * the index — never a shuffle; the switch tolerates HLL's ±2%. */
-  def jaccardPairsAutoFromIndex(idx: DataFrame, idCol: String,
-      minSim: Double, switchAt: Long = 20000, maxDf: Long = 64,
-      docCount: Option[Long] = None): DataFrame = {
-    val n = docCount.getOrElse(
-      idx.agg(approx_count_distinct(col(idCol), 0.02)).head().getLong(0))
-    if (n > switchAt) jaccardPairsCappedFromIndex(idx, idCol, minSim, maxDf)
-    else jaccardPairsFromIndex(idx, idCol, minSim)
-  }
-
   /** Exploded winnowed-fingerprint index: one row per (id, fp),
     * fingerprints already distinct per document (winnowOf returns
     * the distinct window minima). The character-level analogue of
-    * [[shingleIndex]]; same spread (per-row hashing dwarfs scan
-    * cost, input-split parallelism is the wrong parallelism). */
+    * [[shingleIndexFromTokens]]; same spread (per-row hashing dwarfs
+    * scan cost, input-split parallelism is the wrong parallelism). */
   def winnowIndex(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 4): DataFrame =
     Partitioning.spread(
@@ -373,46 +343,13 @@ object Dedup {
     math.max(floor, k)
   }
 
-  /** [[embeddingNearDupLsh]] with the signature sized to the corpus
-    * by [[lshSizing]] — the self-applying 100 TB path. One count()
-    * (a metadata-cheap scan) picks bandBits; at the sf-gate corpus
-    * (500 vectors) the law lands exactly on the gate's (3, 12), at
-    * the sf1 decade (20k vectors) on the measured (8, 12) → ~4 s
-    * (SCALING.md round 12/13). `bands` stays the caller's recall
-    * knob: recall for a pair at cosine s is 1−(1−p^bandBits)^bands
-    * with p = 1 − arccos(s)/π. */
-  def embeddingNearDupLshAuto(df: DataFrame, idCol: String,
-      vecCol: String, dim: Int, minSim: Double, bands: Int = 12,
-      budget: Double = 1000.0, rowCount: Option[Long] = None): DataFrame = {
-    // callers at scale usually know n (catalog stats, ingest census) —
-    // pass it to skip the sizing count() scan, as with
-    // jaccardPairsAutoFromIndex's docCount
-    val bits = lshSizing(rowCount.getOrElse(df.count()), bands, 0.5, budget)
-    embeddingNearDupLsh(df, idCol, vecCol, dim, minSim, bits, bands)
-  }
-
-  /** [[minhashCandidates]] with rows-per-band sized to the corpus by
-    * [[lshSizing]] at p = `minSim` (pairs below the boundary stop
-    * colliding), floored at the gate's 4 rows: (4 rows, 4 bands) at
-    * the 500-doc gate corpus, (8 rows → 32 hashes) at the 50k-doc
-    * sf1 decade where the fixed 16-hash width measured 3.1× at 10×
-    * data. */
-  def minhashCandidatesAuto(df: DataFrame, idCol: String,
-      textCol: String, n: Int = 3, bands: Int = 4, minSim: Double = 0.5,
-      budget: Double = 1000.0, rowCount: Option[Long] = None): DataFrame = {
-    val rows = lshSizing(rowCount.getOrElse(df.count()), bands, minSim,
-      budget, floor = 4)
-    minhashCandidates(df, idCol, textCol, n, numHashes = bands * rows,
-      bands = bands)
-  }
-
   /** MinHash signature as array<string>: element k = min over shingles
     * of the k%4-th 8-hex-char slice of md5((k/4) ‖ ":" ‖ shingle).
     * This HOF form is the READABILITY/PARITY twin — it still pays one
     * md5 per slot (Catalyst does not CSE the digest across the four
     * slots of a group); the production path (MinHashExpr, used by
-    * [[lshBuckets]]) hashes once per group and slices, quartering the
-    * signature stage's hashing work. String-min over hex slices == a
+    * [[lshBucketsFromTokens]]) hashes once per group and slices,
+    * quartering the signature stage's hashing work. String-min over hex slices == a
     * uniform random permutation min for dedup purposes, and is
     * reproducible in any SQL engine — the oracle repeats it verbatim
     * with substr(md5(…)).
@@ -424,22 +361,13 @@ object Dedup {
             lit(":"), s))
           .substr((pmod(k, lit(4)) * 8 + 1).cast("int"), lit(8)))))
 
-  /** LSH band buckets: signature split into `bands` bands of
-    * numHashes/bands rows each; bucket key = md5(band_index ‖ band
-    * slice). Output: (id, band, bucket).
-    */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame =
-    lshBucketsFromTokens(
-      Partitioning.spread(df.select(col(idCol), col(textCol)))
-        .withColumn("_toks", TextFunctions.bm25Tokens(col(textCol))),
-      idCol, n, numHashes, bands)
-
-  /** [[lshBuckets]] from an existing (id, ..., _toks) token frame —
-    * the [[shingleIndexFromTokens]] pattern: an ingest pipeline that
-    * stores its tokens ([[CorpusArtifacts.tokens]], the reference's
-    * `bm25_tokens` column) derives MinHash signatures from them
-    * without re-tokenizing the corpus per query. */
+  /** LSH band buckets from an (id, ..., _toks) token frame (the
+    * [[shingleIndexFromTokens]] contract): the MinHash signature split
+    * into `bands` bands of numHashes/bands rows each; bucket key =
+    * md5(band_index ‖ band slice). An ingest pipeline that stores its
+    * tokens ([[CorpusArtifacts.tokens]], the reference's `bm25_tokens`
+    * column) derives signatures from them without re-tokenizing the
+    * corpus per query. Output: (id, band, bucket). */
   def lshBucketsFromTokens(base: DataFrame, idCol: String,
       n: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame = {
     val rows = numHashes / bands
@@ -466,15 +394,14 @@ object Dedup {
       .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
-  /** Near-dup candidate pairs from LSH: ids sharing any band bucket. */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame =
-    minhashCandidatePairs(lshBuckets(df, idCol, textCol, n, numHashes, bands),
-      idCol)
-
-  /** [[minhashCandidates]] from a stored token frame
-    * ([[lshBucketsFromTokens]]' contract): identical output, no
-    * per-query re-tokenization. */
+  /** Near-dup candidate pairs from LSH over a token frame
+    * ([[lshBucketsFromTokens]]' contract): ids sharing any band
+    * bucket, (id_a, id_b) with id_a < id_b. A corpus-sized width is
+    * `numHashes = bands · rows` with rows = [[lshSizing]] at p =
+    * minSim (pairs below the boundary stop colliding), floored at the
+    * gate's 4 rows: (4 rows, 4 bands) at the 500-doc gate corpus,
+    * (8 rows → 32 hashes) at the 50k-doc sf1 decade where the fixed
+    * 16-hash width measured 3.1× at 10× data (q154). */
   def minhashCandidatesFromTokens(base: DataFrame, idCol: String,
       n: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame =
     minhashCandidatePairs(
@@ -604,31 +531,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
   }
 
-  /** Scale-safe embedding near-dup: banded random-hyperplane LSH
-    * candidates → exact cosine verify on candidates only.
-    *
-    * One `bands*bandBits`-bit signature per row
-    * ([[SimilaritySearch.hyperplaneSignature]] — engine-stable dyadic
-    * LCG planes), band t's bucket key = its bandBits-char slice;
-    * candidates are ids sharing any band bucket (equi-join, the
-    * MinHash-banding shape), then vectors join back by id for the
-    * exact cosine filter. NO cartesian anywhere: candidate volume is
-    * bounded by bucket occupancy, and the id-joins co-partition with
-    * the corpus at scale.
-    *
-    * Recall for a pair at cosine s: 1-(1-p^bandBits)^bands with
-    * p = 1 - arccos(s)/π — at the defaults (3×12) ≈ 0.97 for s=0.4,
-    * →1 as s→1. Precision is exact (candidates are verified).
-    * Output contract matches [[embeddingNearDup]].
-    *
-    * Sizing at scale: expected random collisions are
-    * bands·n²/2^bandBits, so bandBits must grow with ln(n); that is
-    * affordable exactly when the threshold is high (near-dup practice:
-    * s ≥ 0.9 ⇒ p ≈ 0.86 lets bandBits=8, bands=12 keep recall ≈ 0.99
-    * at 2^8× fewer collisions). The 3×12 default serves the gate's
-    * deliberately low 0.4 threshold — a 100 TB run at 0.9 should pass
-    * (8, 12).
-    */
   /** THE banded hyperplane-LSH candidate pipeline — one home for the
     * signature/band/bucket law shared by [[embeddingNearDupLsh]],
     * [[semDedupVerdictsLsh]] (which threads its cluster key into the
@@ -668,7 +570,7 @@ object Dedup {
   /** The hyperplane band-bucket index itself — (extraKeys..., id,
     * band, bucket) — factored from [[bandedCandidatePairs]] so it can
     * be PERSISTED as a snapshot artifact (the embedding analogue of
-    * [[lshBuckets]]' role in [[nearDupAgainstSnapshot]]):
+    * [[lshBucketsFromTokens]]' role in [[nearDupAgainstSnapshot]]):
     * [[ContrastiveMining.hardNegativesAgainstSnapshot]] joins a
     * batch's buckets against this stored index instead of re-hashing
     * the corpus. In steady state the index appends each day's delta
@@ -691,6 +593,32 @@ object Dedup {
         col("bb.bucket").as("bucket"): _*)
   }
 
+  /** Scale-safe embedding near-dup: banded random-hyperplane LSH
+    * candidates → exact cosine verify on candidates only.
+    *
+    * One `bands*bandBits`-bit signature per row
+    * ([[SimilaritySearch.hyperplaneSignature]] — engine-stable dyadic
+    * LCG planes), band t's bucket key = its bandBits-char slice;
+    * candidates are ids sharing any band bucket (equi-join, the
+    * MinHash-banding shape), then vectors join back by id for the
+    * exact cosine filter. NO cartesian anywhere: candidate volume is
+    * bounded by bucket occupancy, and the id-joins co-partition with
+    * the corpus at scale.
+    *
+    * Recall for a pair at cosine s: 1-(1-p^bandBits)^bands with
+    * p = 1 - arccos(s)/π — at the defaults (3×12) ≈ 0.97 for s=0.4,
+    * →1 as s→1. Precision is exact (candidates are verified).
+    * Output contract matches [[embeddingNearDup]].
+    *
+    * Sizing at scale: expected random collisions are
+    * bands·n²/2^bandBits, so bandBits must grow with ln(n) — pass
+    * `lshSizing(n, bands, 0.5)`, which lands exactly on the gate's
+    * (3, 12) at 500 vectors and on the measured (8, 12) at the sf1
+    * decade's 20k (q153; SCALING.md round 12/13). That is affordable
+    * exactly when the threshold is high (near-dup practice: s ≥ 0.9
+    * ⇒ p ≈ 0.86 lets bandBits=8, bands=12 keep recall ≈ 0.99 at 2^8×
+    * fewer collisions). The 3×12 default serves the gate's
+    * deliberately low 0.4 threshold. */
   def embeddingNearDupLsh(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, minSim: Double, bandBits: Int = 3, bands: Int = 12): DataFrame = {
     val base = df.select(col(idCol), col(vecCol))
@@ -718,19 +646,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Near-dup GROUPS from candidate pairs: every document's component
-    * is the smallest id reachable through the pair graph; documents
-    * with no pairs are singleton components of themselves. The walk
-    * itself is [[ConnectedComponents.run]] — the hardened shared
-    * min-label-propagation operator (lineage truncated per round via
-    * localCheckpoint, node set derived from the EDGES so off-`nodes`
-    * pair endpoints still relay labels between in-`nodes` documents,
-    * convergence early-exit, maxIter cap); this face left-joins the
-    * result onto the document roster, coalescing unpaired documents
-    * to themselves, and marks the member a training pipeline KEEPS.
-    *
-    * Output: (id, component, is_representative) — the representative
-    * is the component's min id present in `nodes`. */
   /** Left-join component labels onto the document roster, coalescing
     * unpaired documents to themselves and marking the min-id
     * representative — the shared tail of all three component faces
@@ -744,6 +659,19 @@ object Dedup {
         (col("id") === coalesce(col("comp"), col("id")))
           .as("is_representative"))
 
+  /** Near-dup GROUPS from candidate pairs: every document's component
+    * is the smallest id reachable through the pair graph; documents
+    * with no pairs are singleton components of themselves. The walk
+    * itself is [[ConnectedComponents.run]] — the hardened shared
+    * min-label-propagation operator (lineage truncated per round via
+    * localCheckpoint, node set derived from the EDGES so off-`nodes`
+    * pair endpoints still relay labels between in-`nodes` documents,
+    * convergence early-exit, maxIter cap); this face left-joins the
+    * result onto the document roster, coalescing unpaired documents
+    * to themselves, and marks the member a training pipeline KEEPS.
+    *
+    * Output: (id, component, is_representative) — the representative
+    * is the component's min id present in `nodes`. */
   def connectedComponents(nodes: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 20): DataFrame =
@@ -916,9 +844,9 @@ object Dedup {
     * self-join, and per-cluster work is O(m²·dim) — k grows ∝ n so m
     * stays bounded (the paper runs k = 110k over LAION-440M, m ≈ 4k).
     * An oversized or skewed cluster swaps its pairwise stage for
-    * [[semDedupVerdictsLshAuto]] — same verdict law, banded
-    * candidates with bandBits sized to the cluster — rather than
-    * widening the join. */
+    * [[semDedupVerdictsLsh]] — same verdict law, banded candidates
+    * with bandBits sized to the largest cluster by [[lshSizing]] —
+    * rather than widening the join. */
   def semDedupVerdicts(assigned: DataFrame, idCol: String,
       vecCol: String, clusterCol: String, cents: DataFrame,
       minSim: Double): DataFrame = {
@@ -949,7 +877,14 @@ object Dedup {
     * deterministic on both engines, so q199 gates this face against
     * the SAME LSH law replayed in DuckDB (the q72 LCG planes), and
     * SemDedupSpec pins survivors(exact) ⊆ survivors(lsh) plus the
-    * recall floor on the beaten set. */
+    * recall floor on the beaten set.
+    *
+    * Sizing: at FIXED bandBits the expected random collisions per
+    * cluster are bands·m²/2^bandBits — still Θ(m²·d) with a worse
+    * constant than the exact pairwise, at every m. The banding pays
+    * only when bandBits grows ∝ ln m: pass `lshSizing(m, bands, 0.5)`
+    * with m the largest cluster's size (one per-cluster count + max,
+    * setup-time driver state, or catalog stats). */
   def semDedupVerdictsLsh(assigned: DataFrame, idCol: String,
       vecCol: String, clusterCol: String, cents: DataFrame,
       minSim: Double, dim: Int, bandBits: Int = 3,
@@ -977,28 +912,6 @@ object Dedup {
         col("_id_a")).otherwise(col("_id_b")).as(idCol))
       .distinct()
     verdictFrame(withCent, beaten, idCol, clusterCol)
-  }
-
-  /** [[semDedupVerdictsLsh]] with bandBits sized to the LARGEST
-    * cluster by [[lshSizing]]. This sizing is what makes the LSH
-    * face actually beat the exact face: at FIXED bandBits the
-    * expected random collisions per cluster are bands·m²/2^bandBits
-    * — still Θ(m²·d) with a worse constant than the exact pairwise,
-    * at every m. bandBits must grow ∝ ln m (the [[lshSizing]] law,
-    * shared with [[embeddingNearDupLshAuto]]) for the banding to
-    * pay. One per-cluster count + max (setup-time driver state,
-    * kmeansIvf style); callers with catalog stats pass
-    * `maxClusterSize` to skip the scan. */
-  def semDedupVerdictsLshAuto(assigned: DataFrame, idCol: String,
-      vecCol: String, clusterCol: String, cents: DataFrame,
-      minSim: Double, dim: Int, bands: Int = 12,
-      budget: Double = 1000.0,
-      maxClusterSize: Option[Long] = None): DataFrame = {
-    val m = maxClusterSize.getOrElse(
-      assigned.groupBy(col(clusterCol)).count()
-        .agg(max(col("count"))).collect()(0).getLong(0))
-    semDedupVerdictsLsh(assigned, idCol, vecCol, clusterCol, cents,
-      minSim, dim, lshSizing(m, bands, 0.5, budget), bands)
   }
 
   /** Exact-substring span REMOVAL (Lee et al. 2022,
@@ -1201,14 +1114,7 @@ object Dedup {
   def removeBoilerplateLines(df: DataFrame, idCol: String,
       textCol: String, minDf: Long): DataFrame =
     removeBoilerplateLinesWithConvicted(df, idCol, textCol,
-      convictedBoilerplateLines(df, idCol, textCol, minDf))
-
-  /** The TRAINING face: the df-capped convicted-lines frame a
-    * continuous pipeline persists once over the corpus (column
-    * `line`). Trim-empty lines never convict. */
-  def convictedBoilerplateLines(df: DataFrame, idCol: String,
-      textCol: String, minDf: Long): DataFrame =
-    convictedFromCounts(boilerplateLineCounts(df, idCol, textCol), minDf)
+      convictedFromCounts(boilerplateLineCounts(df, idCol, textCol), minDf))
 
   /** Per-batch line document-frequency counts — the persistable
     * artifact behind the incremental TRAIN face (column (line, df)).
@@ -1238,8 +1144,10 @@ object Dedup {
       .groupBy(col("line"))
       .agg(sum(col("df")).as("df"))
 
-  /** Conviction from persisted counts: the [[convictedBoilerplateLines]]
-    * threshold applied to a (line, df) frame. */
+  /** Conviction from (line, df) counts: the df-thresholded
+    * convicted-lines frame (column `line`) a continuous pipeline
+    * persists. Trim-empty lines never convict (they never enter the
+    * counts). */
   def convictedFromCounts(counts: DataFrame, minDf: Long): DataFrame = {
     require(minDf > 0, s"minDf must be positive: $minDf")
     counts.where(col("df") >= minDf).select(col("line"))
@@ -1249,7 +1157,7 @@ object Dedup {
     * the given frame — stateless w.r.t. the input, so it applies
     * unchanged to a streaming delta via foreachBatch (stream-static
     * join; StreamingSpec pins the posture). `convicted` carries the
-    * lines in a `line` column ([[convictedBoilerplateLines]]). */
+    * lines in a `line` column ([[convictedFromCounts]]). */
   def removeBoilerplateLinesWithConvicted(df: DataFrame, idCol: String,
       textCol: String, convicted: DataFrame): DataFrame = {
     val lines = df.select(col(idCol),
@@ -1317,7 +1225,7 @@ object Dedup {
     * deduplicates at both document and substring granularity and
     * notes paragraph-level removal as the common production middle;
     * this completes the engine's granularity matrix: document
-    * ([[exact]]/near-dup), paragraph (THIS), line
+    * ([[exactFromFingerprints]]/near-dup), paragraph (THIS), line
     * ([[removeBoilerplateLines]] cross-doc, [[dedupLinesWithinDoc]]
     * within-doc), token window ([[removeSharedSpans]])). The law:
     * paragraphs split on blank-line runs ('\n\n+', the universal
@@ -1407,11 +1315,6 @@ object Dedup {
           s => s.getField("_para")), "\n\n").as("clean_text"))
   }
 
-  /** Cross-snapshot incremental dedup, exact path: which BATCH
-    * documents are NEW against a prior corpus snapshot's fingerprint
-    * set — one anti join on the normalized-content fingerprint
-    * ([[TextFunctions.fingerprint]], the exact-dedup law). Output:
-    * the batch's new rows as (idCol, fingerprint). */
   /** Release DIFF between two corpus snapshots (the dataset-
     * versioning face next to the [[newAgainstSnapshot]] family —
     * what a release changelog ships): per-id status by the
@@ -1451,6 +1354,11 @@ object Dedup {
         col("old_fingerprint"), col("new_fingerprint"))
   }
 
+  /** Cross-snapshot incremental dedup, exact path: which BATCH
+    * documents are NEW against a prior corpus snapshot's fingerprint
+    * set — one anti join on the normalized-content fingerprint
+    * ([[TextFunctions.fingerprint]], the exact-dedup law). Output:
+    * the batch's new rows as (idCol, fingerprint). */
   def newAgainstSnapshot(batch: DataFrame, idCol: String,
       textCol: String, priorFps: DataFrame): DataFrame =
     batch.select(col(idCol),
@@ -1541,13 +1449,16 @@ object Dedup {
       textCol: String, priorBuckets: DataFrame, priorIdCol: String,
       priorShingles: DataFrame, minSim: Double, n: Int = 3,
       numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    val bBk = lshBuckets(batch, idCol, textCol, n, numHashes, bands)
+    // ONE tokenization of the batch feeds both its buckets and its
+    // shingles
+    val toks = Search.tokenBase(batch, idCol, textCol)
+    val bBk = lshBucketsFromTokens(toks, idCol, n, numHashes, bands)
       .select(col(idCol).as("_bid"), col("band"), col("bucket"))
     val cand = bBk
       .join(priorBuckets.select(col(priorIdCol).as("_pid"),
         col("band"), col("bucket")), Seq("band", "bucket"))
       .select(col("_bid"), col("_pid")).distinct()
-    val bIdx = shingleIndex(batch, idCol, textCol, n)
+    val bIdx = shingleIndexFromTokens(toks, idCol, n)
     val nB = bIdx.groupBy(col(idCol).as("_bid"))
       .agg(count(lit(1)).as("_n_b"))
     val nP = priorShingles.groupBy(col(priorIdCol).as("_pid"))

@@ -85,7 +85,12 @@ object Sampling {
     * to sqrt (exactly rounded) rather than pow. Output: strataCol,
     * n, fraction (rounded to 6 places). Plan: one tiny groupBy, then
     * one single-partition collect_list of the k (stratum, n) rows that
-    * is exploded back with n_min = array_min over the list — no join. */
+    * is exploded back with n_min = array_min over the list — no join.
+    *
+    * Contract: the strata must be BOUNDED (languages, sources — not
+    * ids). Every stratum rides in ONE collect_list row, built by one
+    * task, so a stratum column with millions of values makes one row
+    * of millions of structs. */
   def temperatureFractions(df: DataFrame, strataCol: String,
       alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha in (0,1]: $alpha")
@@ -123,7 +128,10 @@ object Sampling {
     * style), and apply [[stratifiedSample]]'s literal CASE ladder.
     * Membership stays a pure function of (salt, id). A null stratum
     * forms its own group and takes its own fraction (the null-keyed
-    * ladder arm); the q183 oracle's corpus has no null langs. */
+    * ladder arm); the q183 oracle's corpus has no null langs.
+    * Bounded strata only: the fractions come from
+    * [[temperatureFractions]], where every stratum rides in one
+    * collect_list row, and each becomes a literal ladder arm. */
   def temperatureSample(df: DataFrame, strataCol: String, idCol: String,
       alpha: Double, salt: String): DataFrame = {
     val fractions = temperatureFractions(df, strataCol, alpha)
@@ -142,7 +150,9 @@ object Sampling {
     * upstream either way.) Equivalence with the collect form is
     * spec-pinned. The broadcast join is inner on the stratum, so
     * null strata drop here (the collect form gives them their own
-    * arm) — matching the oracle's JOIN USING semantics. */
+    * arm) — matching the oracle's JOIN USING semantics. Bounded strata
+    * only: the thresholds derive from [[temperatureFractions]], where
+    * every stratum rides in one collect_list row. */
   def temperatureSampleInPlan(df: DataFrame, strataCol: String,
       idCol: String, alpha: Double, salt: String): DataFrame = {
     val v = round(col("fraction") * HexScale, 0)

@@ -37,30 +37,6 @@ object Search {
   val defaultK1 = 1.2
   val defaultB = 0.75
 
-  /** Build the reusable index (one tokenization pass; persist or
-    * export the three frames at ingest).
-    *
-    * `eager = true` is the ingest-job mode: the three output frames are
-    * persisted and materialized NOW and the intermediate tokenized base
-    * (the widest frame — it holds the token arrays) is dropped, so the
-    * returned index holds only the compact artifacts.
-    *
-    * `eager = false` PINS the token base (r18 review pass 4): the
-    * returned frames reference it 4-5× per query plan, so it must be
-    * cached to avoid re-tokenizing the corpus per branch — and there
-    * is no safe point to release it inside a lazy face. One-shot /
-    * test callers are fine; long-lived pipelines use `eager = true`
-    * or [[buildIndexFromTokens]] over a base whose lifecycle they
-    * own (the CorpusArtifacts posture). */
-  def buildIndex(df: DataFrame, idCol: String, textCol: String,
-      eager: Boolean = false): Bm25Index = {
-    val base = tokenBase(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = buildIndexFromTokens(base, idCol, eager)
-    if (eager) base.unpersist()
-    out
-  }
-
   /** The shared (id, dl, _toks) token frame — ONE tokenization pass
     * that both the BM25 index and the shingle index derive from
     * (CorpusArtifacts builds it once per corpus). */
@@ -69,8 +45,14 @@ object Search {
       .withColumn("_toks", TextFunctions.bm25Tokens(col(textCol)))
       .select(col(idCol), size(col("_toks")).as("dl"), col("_toks"))
 
-  /** Build the index from an existing (persisted) [[tokenBase]] frame;
-    * the caller owns the base's lifecycle. */
+  /** Build the reusable index from a [[tokenBase]] frame; the caller
+    * owns the base's lifecycle (persist it when several consumers read
+    * it — the lazy frames reference it 4-5× per query plan — as
+    * CorpusArtifacts does).
+    *
+    * `eager = true` is the ingest-job mode: the four output frames are
+    * persisted and materialized NOW, so the returned index holds only
+    * the compact artifacts and no query re-reads the base. */
   def buildIndexFromTokens(base: DataFrame, idCol: String,
       eager: Boolean = false): Bm25Index = {
     val idx = base
@@ -127,7 +109,9 @@ object Search {
         col("idf") * (col("tf") * (lit(k1) + 1)) /
           (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
 
-  /** Score a query against a prebuilt index. At the default k1/b this
+  /** BM25 scores of `queryTerms` against a prebuilt index; one row
+    * per matching doc: (id, score), with
+    * idf = ln(1 + (N - df + 0.5)/(df + 0.5)). At the default k1/b this
     * reads the precomputed impact index (filter + one groupBy); custom
     * k1/b fall back to scoring from the raw postings.
     *
@@ -154,14 +138,6 @@ object Search {
     }
   }
 
-  /** BM25 scores of `queryTerms` over the corpus; one row per matching
-    * doc: (id, score). k1=1.2, b=0.75,
-    * idf = ln(1 + (N - df + 0.5)/(df + 0.5)).
-    */
-  def bm25(df: DataFrame, idCol: String, textCol: String,
-      queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    scoreWith(buildIndex(df, idCol, textCol), queryTerms, k1, b)
-
   /** Legacy weighted merge (search_service.py:502-542): blended =
     * w·vector + (1-w)·(lexical/max_lexical), missing scores as 0,
     * over the full outer union of both result sets.
@@ -169,13 +145,13 @@ object Search {
   def weightedMerge(vec: DataFrame, lex: DataFrame, idCol: String,
       vecWeight: Double): DataFrame = {
     val v = vec.select(col(idCol), col("score").as("_v"))
-    // cached: the max() normalization branch would otherwise re-run
-    // the whole lexical scoring subtree a second time. NO release
-    // path (r18 review pass 4) — the pin lasts until driver GC;
-    // result sets are top-k-sized so the pinned footprint is bounded,
-    // but a long-lived service should pass an already-materialized
-    // `lex` and own its lifecycle.
-    val l = lex.select(col(idCol), col("score").as("_l")).cache()
+    // not cached: a cache here has no release path. The max()
+    // normalization branch evaluates the lexical subtree a second
+    // time (AQE does not reuse its exchange: q39 plans two shuffle
+    // stages over the impact index); a caller whose `lex` is
+    // expensive to recompute passes an already-materialized frame and
+    // owns its lifecycle.
+    val l = lex.select(col(idCol), col("score").as("_l"))
     val maxLex = broadcast(l.agg(max(col("_l")).as("_lmax")))
     v.join(l, Seq(idCol), "full_outer")
       .crossJoin(maxLex)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Search}
 
 /** Gates the LSH-banded embedding near-dup (q72) against the exact
   * cartesian baseline (q20) on the sf0.001 corpus: candidates are
@@ -70,43 +70,23 @@ class DedupLshSpec extends AnyFunSuite {
   }
 
   test("auto paths reproduce the fixed-parameter gate plans at gate scale") {
+    // the self-sizing gate paths (q153/q154): the caller counts the
+    // corpus and passes the width lshSizing picks
     val sf = "/root/testdata/sf0.001"
     val emb = Tables.load(spark, sf, "embeddings")
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // 500 vectors → law picks (3, 12) — byte-identical to q72's plan
-    assert(pairs(Dedup.embeddingNearDupLshAuto(emb, "vec_id", "embedding", 64, 0.4))
-      === pairs(Dedup.embeddingNearDupLsh(emb, "vec_id", "embedding", 64, 0.4, 3, 12)))
-    // a caller-supplied rowCount drives the same sizing, no count() scan
-    assert(pairs(Dedup.embeddingNearDupLshAuto(emb, "vec_id", "embedding",
-        64, 0.4, rowCount = Some(500L)))
+    assert(pairs(Dedup.embeddingNearDupLsh(emb, "vec_id", "embedding", 64, 0.4,
+        Dedup.lshSizing(emb.count(), 12, 0.5), 12))
       === pairs(Dedup.embeddingNearDupLsh(emb, "vec_id", "embedding", 64, 0.4, 3, 12)))
     // 500 documents → floor keeps q18's (16 hashes, 4 bands)
-    val docs = Tables.load(spark, sf, "documents")
-    assert(pairs(Dedup.minhashCandidatesAuto(docs, "doc_id", "text"))
-      === pairs(Dedup.minhashCandidates(docs, "doc_id", "text", 3, 16, 4)))
-  }
-
-  test("jaccard auto-switch: exact below switchAt, capped above") {
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val idx = Dedup.shingleIndex(docs, "doc_id", "text", 3).cache()
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Dedup.jaccardPairsFromIndex(idx, "doc_id", 0.2))
-    // 500 docs < switchAt → the exact plan, byte-identical
-    assert(pairs(Dedup.jaccardPairsAutoFromIndex(idx, "doc_id", 0.2)) === exact)
-    // forcing the switch (switchAt below the corpus) engages the
-    // capped generator: still a subset with exact similarity values
-    val capped = pairs(Dedup.jaccardPairsAutoFromIndex(idx, "doc_id", 0.2,
-      switchAt = 100, maxDf = 64))
-    assert(capped.subsetOf(exact))
-    // the explicitly supplied docCount skips the HLL estimate and
-    // drives the same switch
-    assert(pairs(Dedup.jaccardPairsAutoFromIndex(idx, "doc_id", 0.2,
-      docCount = Some(500L))) === exact)
-    idx.unpersist()
+    val toks = Search.tokenBase(Tables.load(spark, sf, "documents"),
+      "doc_id", "text")
+    val rows = Dedup.lshSizing(toks.count(), 4, 0.5, floor = 4)
+    assert(pairs(Dedup.minhashCandidatesFromTokens(toks, "doc_id", 3, 4 * rows, 4))
+      === pairs(Dedup.minhashCandidatesFromTokens(toks, "doc_id", 3, 16, 4)))
   }
 
   test("simhashHammingCandidates: banding recall is EXACT at " +

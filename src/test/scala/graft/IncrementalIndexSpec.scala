@@ -24,13 +24,18 @@ class IncrementalIndexSpec extends AnyFunSuite {
   private def impacts(idx: Search.Bm25Index): Set[(Long, String, Double)] =
     idx.impacts.as[(Long, String, Double)].collect().toSet
 
+  /** The from-scratch index over a corpus state. */
+  private def rebuilt(rows: Seq[(Long, String)]): Search.Bm25Index =
+    Search.buildIndexFromTokens(
+      Search.tokenBase(rows.toDF("doc_id", "text"), "doc_id", "text"), "doc_id")
+
   test("incremental sync equals a full rebuild at every step") {
     val base = java.nio.file.Files.createTempDirectory("incidx").toString + "/tb"
     val n1 = IncrementalIndex.syncTokenBase(spark, base,
       v1.toDF("doc_id", "text"), "doc_id", "text")
     assert(n1 === 6)
     assert(impacts(IncrementalIndex.index(spark, base, "doc_id")) ===
-      impacts(Search.buildIndex(v1.toDF("doc_id", "text"), "doc_id", "text")))
+      impacts(rebuilt(v1)))
 
     // doc 2 edited, doc 7 added, doc 5 deleted — only 2 docs tokenize
     val delta = Seq((2L, "filter data columns with spark engine"),
@@ -42,7 +47,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val v2 = v1.filterNot(_._1 == 5L).filterNot(_._1 == 2L) ++ delta
     val inc = IncrementalIndex.index(spark, base, "doc_id")
     assert(impacts(inc) ===
-      impacts(Search.buildIndex(v2.toDF("doc_id", "text"), "doc_id", "text")))
+      impacts(rebuilt(v2)))
     // global stats moved with the delta (N, avgdl are corpus-wide)
     val (n, avgdl) = inc.stats.as[(Double, Double)].head()
     assert(n === 6.0)
@@ -71,7 +76,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val v2 = v1.map { case (id, t) =>
       if (id == 3L) (id, "query planner joins zanzibar tables") else (id, t) }
     assert(impacts(after) ===
-      impacts(Search.buildIndex(v2.toDF("doc_id", "text"), "doc_id", "text")))
+      impacts(rebuilt(v2)))
     Seq(before, after).foreach(i =>
       Seq(i.idx, i.dls, i.stats, i.impacts).foreach(_.unpersist()))
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, QualityFilters}
+import graft.operators.{Dedup, QualityFilters, Search}
 
 /** The NULL-text convention, executable (r18 verdict item 2).
   *
@@ -36,14 +36,15 @@ class NullTextParitySpec extends AnyFunSuite {
       (11L, "alpha beta gamma delta epsilon zeta"), // true near-dup of 10
       (12L, "completely different words entirely here")))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashCandidates(docs, "doc_id", "text", 3, 16, 4)
+    val toks = Search.tokenBase(docs, "doc_id", "text")
+    val pairs = Dedup.minhashCandidatesFromTokens(toks, "doc_id", 3, 16, 4)
       .as[(Long, Long)].collect().toSet
     assert(pairs === Set((10L, 11L)),
       "only the genuine near-dup pair may surface; before the guard " +
         "this set contained every pair of ids 1-5")
     val comps = Dedup.connectedComponents(
         docs.select($"doc_id"), "doc_id",
-        Dedup.minhashCandidates(docs, "doc_id", "text", 3, 16, 4),
+        Dedup.minhashCandidatesFromTokens(toks, "doc_id", 3, 16, 4),
         "id_a", "id_b")
       .as[(Long, Long, Boolean)].collect()
       .map(r => r._1 -> r._2).toMap

@@ -119,7 +119,7 @@ class ChunkerSpec extends AnyFunSuite {
 }
 
 class DedupSpec extends AnyFunSuite {
-  import graft.operators.Dedup
+  import graft.operators.{Dedup, Search}
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -127,7 +127,8 @@ class DedupSpec extends AnyFunSuite {
     val df = Seq(
       (1L, "Hello   World"), (2L, "hello world"), (3L, "unique doc here"))
       .toDF("doc_id", "text")
-    val got = Dedup.exact(df, "doc_id", "text")
+    val got = Dedup.exactFromFingerprints(
+        Dedup.fingerprintFrame(df, "doc_id", "text"), "doc_id")
       .select($"kept_id", $"n_dups").as[(Long, Long)].collect().sortBy(_._1)
     assert(got.toSeq === Seq((1L, 2L), (3L, 1L)))
   }
@@ -143,7 +144,8 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(2)))
     assert(got.toSeq === Seq((1L, "a"), (3L, "c")))
     // same survivors as the groupBy face
-    val viaExact = Dedup.exact(df, "doc_id", "text")
+    val viaExact = Dedup.exactFromFingerprints(
+        Dedup.fingerprintFrame(df, "doc_id", "text"), "doc_id")
       .select($"kept_id").as[Long].collect().toSet
     assert(got.map(_._1).toSet === viaExact)
   }
@@ -176,12 +178,18 @@ class DedupSpec extends AnyFunSuite {
       (2L, "hello world"), (1L, "Hello   World"), (3L, "unique doc here"),
       (4L, "HELLO world"), (5L, "another one-off text body"))
       .toDF("doc_id", "text")
-    val direct = Dedup.exact(df, "doc_id", "text")
-      .orderBy("fingerprint").collect().toSeq
-    val viaArtifact = Dedup.exactFromFingerprints(
+    // the law over a fresh fingerprintFrame vs over the stored artifact
+    val direct = Dedup.exactFromFingerprints(
         Dedup.fingerprintFrame(df, "doc_id", "text"), "doc_id")
       .orderBy("fingerprint").collect().toSeq
+    val stored = graft.operators.CorpusArtifacts.fingerprints(
+      "DedupSpec:exactFromFingerprints", df, "doc_id", "text")
+    val viaArtifact = Dedup.exactFromFingerprints(stored, "doc_id")
+      .orderBy("fingerprint").collect().toSeq
+    stored.unpersist()
     assert(viaArtifact === direct)
+    assert(direct.map(r => (r.getLong(1), r.getLong(2))).sorted ===
+      Seq((1L, 3L), (3L, 1L), (5L, 1L)))
   }
 
   test("jaccardPairsFromIndex on mixed-length docs: containment pairs " +
@@ -204,7 +212,8 @@ class DedupSpec extends AnyFunSuite {
     val d5 = d4 + " " + (1 to 24).map(i => s"u$i").mkString(" ") // 30 shingles
     val df = Seq((1L, base), (2L, near), (3L, long), (4L, d4), (5L, d5))
       .toDF("doc_id", "text")
-    val idx = Dedup.shingleIndex(df, "doc_id", "text", 3)
+    val idx = Dedup.shingleIndexFromTokens(
+      Search.tokenBase(df, "doc_id", "text"), "doc_id", 3)
     val got = Dedup.jaccardPairsFromIndex(idx, "doc_id", 0.2)
       .select($"id_a", $"id_b", $"n_common", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
@@ -232,7 +241,8 @@ class DedupSpec extends AnyFunSuite {
     val b = "alpha beta gamma delta epsilon zeta eta iota" // 1 token differs
     val c = "completely different words entirely unrelated content here now"
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val idx = Dedup.shingleIndex(df, "doc_id", "text", 3).cache()
+    val idx = Dedup.shingleIndexFromTokens(
+      Search.tokenBase(df, "doc_id", "text"), "doc_id", 3).cache()
     val pairs = Dedup.jaccardPairsFromIndex(idx, "doc_id", 0.2)
       .select($"id_a", $"id_b").as[(Long, Long)].collect()
     idx.unpersist()
@@ -247,7 +257,8 @@ class DedupSpec extends AnyFunSuite {
     // they hold has df >= 6
     val df = (Seq((1L, a), (2L, b), (3L, "unrelated other words entirely here today now friend")) ++
       (4L to 9L).map(i => (i, boiler))).toDF("doc_id", "text")
-    val idx = Dedup.shingleIndex(df, "doc_id", "text", 3)
+    val idx = Dedup.shingleIndexFromTokens(
+      Search.tokenBase(df, "doc_id", "text"), "doc_id", 3)
     val exact = Dedup.jaccardPairsFromIndex(idx, "doc_id", 0.2)
       .select($"id_a", $"id_b", $"n_common", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
@@ -270,7 +281,8 @@ class DedupSpec extends AnyFunSuite {
     val a = "alpha beta gamma delta epsilon zeta eta theta"
     val c = "completely different words entirely unrelated content here now"
     val df = Seq((1L, a), (2L, a), (3L, c)).toDF("doc_id", "text")
-    val pairs = Dedup.minhashCandidates(df, "doc_id", "text")
+    val pairs = Dedup.minhashCandidatesFromTokens(
+        Search.tokenBase(df, "doc_id", "text"), "doc_id")
       .as[(Long, Long)].collect()
     assert(pairs.toSeq === Seq((1L, 2L)))
   }
@@ -406,8 +418,10 @@ class DedupSpec extends AnyFunSuite {
       (101L, "unrelated benchmark prose nothing shared across"))
       .toDF("doc_id", "text")
     val out = Dedup.crossJaccardPairs(
-      Dedup.shingleIndex(train, "doc_id", "text", 3), "doc_id",
-      Dedup.shingleIndex(bench, "doc_id", "text", 3), "doc_id", 0.2)
+      Dedup.shingleIndexFromTokens(
+        Search.tokenBase(train, "doc_id", "text"), "doc_id", 3), "doc_id",
+      Dedup.shingleIndexFromTokens(
+        Search.tokenBase(bench, "doc_id", "text"), "doc_id", 3), "doc_id", 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     assert(out.toSeq === Seq((1L, 100L, 1.0)))
   }
@@ -442,11 +456,31 @@ class SearchSpec extends AnyFunSuite {
     val df = Seq(
       (1L, "spark spark spark common"), (2L, "common words here"),
       (3L, "common spark words"), (4L, "nothing relevant")).toDF("doc_id", "text")
-    val got = Search.bm25(df, "doc_id", "text", Seq("spark", "common"))
+    val got = Search.scoreWith(Search.buildIndexFromTokens(
+        Search.tokenBase(df, "doc_id", "text"), "doc_id"), Seq("spark", "common"))
       .orderBy(desc("score")).select($"doc_id").as[Long].collect()
     // doc1 has tf=3 of the rarer term
     assert(got.head === 1L)
     assert(got.length === 3) // doc4 matches nothing
+  }
+
+  test("weightedMerge leaves no cache entry behind once its result " +
+      "is collected") {
+    val vec = Seq((1L, 0.9), (2L, 0.5)).toDF("id", "score")
+    val lex = Seq((2L, 4.0), (3L, 2.0)).toDF("id", "score")
+    // numCachedEntries is sql-private; it is read reflectively
+    val cache = spark.sharedState.cacheManager
+    def entries: Int = cache.getClass.getMethod("numCachedEntries")
+      .invoke(cache).asInstanceOf[Int]
+    val before = entries
+    val got = Search.weightedMerge(vec, lex, "id", 0.7)
+      .as[(Long, Double)].collect().toMap
+    assert(entries === before)
+    // blended = 0.7·vector + 0.3·(lexical / max lexical), missing as 0
+    assert(got.keySet === Set(1L, 2L, 3L))
+    assert(math.abs(got(1L) - 0.63) < 1e-12)
+    assert(math.abs(got(2L) - 0.65) < 1e-12)
+    assert(math.abs(got(3L) - 0.15) < 1e-12)
   }
 
   test("rrf fusion matches hand-computed 1/(60+rank) sums") {

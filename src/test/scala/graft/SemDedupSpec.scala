@@ -103,35 +103,6 @@ class SemDedupSpec extends AnyFunSuite {
     assert(recall >= 0.8, s"recall=$recall (${lshBeaten.size}/${exactBeaten.size})")
   }
 
-  test("semDedupVerdictsLshAuto: sizes bandBits from the largest " +
-      "cluster by the shared lshSizing law") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val cents = SimilaritySearch.meanCentroids(emb, "label", "embedding")
-    // largest label holds ~59 vectors — the per-CLUSTER collision
-    // budget is far under target, so the law floors at 1 bit (widest
-    // buckets, maximum recall); auto must equal the manual (1, 12)
-    // face, NOT the corpus-sized 3 bits of the unclustered q72 path
-    val mMax = emb.groupBy("label").count()
-      .agg(org.apache.spark.sql.functions.max("count"))
-      .collect()(0).getLong(0)
-    val bits = Dedup.lshSizing(mMax, 12, 0.5)
-    assert(bits === 1)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getBoolean(3))).toSet
-    val manual = rows(Dedup.semDedupVerdictsLsh(emb, "vec_id",
-      "embedding", "label", cents, 0.30, 64, bits, 12))
-    assert(rows(Dedup.semDedupVerdictsLshAuto(emb, "vec_id",
-      "embedding", "label", cents, 0.30, 64)) === manual)
-    // catalog-stats arm skips the sizing scan but must size the same
-    assert(rows(Dedup.semDedupVerdictsLshAuto(emb, "vec_id",
-        "embedding", "label", cents, 0.30, 64,
-        maxClusterSize = Some(mMax)))
-      === manual)
-    // the sizing law grows with the cluster, not the corpus: a 20k
-    // cluster (sf1 decade) sizes to 8 bits — collisions 2^5x down
-    assert(Dedup.lshSizing(20000, 12, 0.5) === 8)
-  }
-
   test("semDedupVerdicts: keep is monotone in the threshold") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val cents = SimilaritySearch.meanCentroids(emb, "label", "embedding")

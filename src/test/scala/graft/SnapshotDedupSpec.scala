@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Search}
 import graft.functions.TextFunctions
 
 /** Cross-snapshot incremental dedup (Dedup.newAgainstSnapshot /
@@ -81,9 +81,10 @@ class SnapshotDedupSpec extends AnyFunSuite {
       (11L, "unrelated batch prose concerning parquet readers only"),
       (12L, null: String))
       .toDF("doc_id", "text")
+    val priorToks = Search.tokenBase(prior, "doc_id", "text")
     val out = Dedup.nearDupAgainstSnapshot(batch, "doc_id", "text",
-        Dedup.lshBuckets(prior, "doc_id", "text"), "doc_id",
-        Dedup.shingleIndex(prior, "doc_id", "text"), minSim = 0.5)
+        Dedup.lshBucketsFromTokens(priorToks, "doc_id"), "doc_id",
+        Dedup.shingleIndexFromTokens(priorToks, "doc_id"), minSim = 0.5)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getDouble(2), r.getBoolean(3)))).toMap
     assert(out(10L) === ((1L, 1.0, true)))
@@ -99,9 +100,10 @@ class SnapshotDedupSpec extends AnyFunSuite {
     val batch = docs.where(col("doc_id") >= 250)
     val stillNew = ids(Dedup.newAgainstSnapshot(batch, "doc_id", "text",
       prior.select(TextFunctions.fingerprint(col("text")).as("fingerprint"))))
+    val priorToks = Search.tokenBase(prior, "doc_id", "text")
     val verdicts = Dedup.nearDupAgainstSnapshot(batch, "doc_id", "text",
-        Dedup.lshBuckets(prior, "doc_id", "text"), "doc_id",
-        Dedup.shingleIndex(prior, "doc_id", "text"), minSim = 0.5)
+        Dedup.lshBucketsFromTokens(priorToks, "doc_id"), "doc_id",
+        Dedup.shingleIndexFromTokens(priorToks, "doc_id"), minSim = 0.5)
       .collect().map(r => r.getLong(0) ->
         ((r.getDouble(2), r.getBoolean(3)))).toMap
     val exactDups = verdicts.keySet.diff(stillNew)

