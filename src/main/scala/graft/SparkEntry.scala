@@ -294,9 +294,11 @@ object SparkEntry {
   private def q08(s: SparkSession, dir: String): DataFrame =
     Sessionize.sessions(t(s, dir, "events"), "user_id", "ts", "event_id", 30)
 
-  /** BM25 tokenizer → term frequencies (two_tier_chunker.py:69-77).
-    * Materializes the shared index — the ingest step of the lexical
-    * pipeline; q23/q24/q39/q42/q49 score against it. */
+  /** BM25 tokenizer → term frequencies (two_tier_chunker.py:69-77):
+    * the postings of the shared index, a projection of the stored
+    * token frame. Reading them builds the index on first use — the
+    * ingest step of the lexical pipeline; q23/q24/q39/q42/q49 score
+    * against its persisted impact frame. */
   private def q09(s: SparkSession, dir: String): DataFrame =
     docsBm25(s, dir).idx
 

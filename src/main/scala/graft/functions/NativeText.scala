@@ -40,6 +40,15 @@ object NativeText {
     GraftColumnBridge.column(
       MinHashExpr(GraftColumnBridge.expression(tokens), n, numHashes))
 
+  /** Column API: the term counts of a token array —
+    * array<struct<token, tf: long>>, one entry per distinct token in
+    * token order, tf = its number of occurrences; null in, null out.
+    * Exploding it gives exactly the rows of
+    * `explode(tokens).groupBy(token).count()` for that row, without a
+    * shuffle (see [[TermCountsExpr]]). */
+  def termCountsOf(tokens: Column): Column =
+    GraftColumnBridge.column(TermCountsExpr(GraftColumnBridge.expression(tokens)))
+
   private[functions] def buildShingles(arr: ArrayData, n: Int,
       distinct: Boolean): Array[UTF8String] = {
     val num = arr.numElements()
@@ -241,6 +250,46 @@ case class ShinglesExpr(child: Expression, n: Int)
         .asInstanceOf[Array[Any]])
   override protected def withNewChildInternal(c: Expression): ShinglesExpr = copy(child = c)
   override def prettyName: String = "shingles"
+}
+
+/** Per-row term counts: one (token, tf) struct per distinct token,
+  * sorted as `sort(token)` sorts (binary order, a null element first;
+  * a null counts as a token of its own, as a null group key does in a
+  * groupBy). The fixed order makes a per-document sum over the
+  * exploded entries independent of the order the tokens came in. */
+case class TermCountsExpr(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  import org.apache.spark.sql.types.{StructField, StructType}
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("token", StringType,
+      nullable = child.dataType.asInstanceOf[ArrayType].containsNull),
+    StructField("tf", LongType, nullable = false))), containsNull = false)
+
+  override def nullSafeEval(toks: Any): Any = {
+    val arr = toks.asInstanceOf[ArrayData]
+    val counts = new java.util.HashMap[UTF8String, Array[Long]]()
+    var i = 0
+    while (i < arr.numElements()) {
+      val t = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
+      val c = counts.get(t)
+      if (c == null) counts.put(t, Array(1L)) else c(0) += 1
+      i += 1
+    }
+    val keys = counts.keySet.toArray(new Array[UTF8String](0))
+    java.util.Arrays.sort(keys, TermCountsExpr.TokenOrder)
+    new GenericArrayData(keys.map(t =>
+      org.apache.spark.sql.catalyst.InternalRow(t, counts.get(t)(0)): Any))
+  }
+
+  override protected def withNewChildInternal(c: Expression): TermCountsExpr =
+    copy(child = c)
+  override def prettyName: String = "graft_term_counts"
+}
+
+object TermCountsExpr {
+  private val TokenOrder: java.util.Comparator[UTF8String] =
+    java.util.Comparator.nullsFirst[UTF8String]((a, b) => a.binaryCompare(b))
 }
 
 /** MinHash signature over n-gram shingles: element k = min over the

@@ -14,7 +14,11 @@ import graft.operators.Search
   * artifact is the TOKEN BASE `(id, dl, _toks)` — kept current by a
   * primary-key MERGE that re-tokenizes ONLY the changed documents —
   * and the per-corpus artifacts (df, stats, impacts) recompute from
-  * it on demand. Recomputing them is not wasted work: BM25's idf and
+  * it on demand: an eager rebuild is one narrow pass over the base's
+  * part files for df and the corpus stats, then one persisted,
+  * token-sorted impact frame ([[Search.buildIndexFromTokens]]); the
+  * postings and document lengths stay projections of the base.
+  * Recomputing them is not wasted work: BM25's idf and
   * length normalization are corpus-global, so ANY delta legitimately
   * moves every impact value (N, avgdl, and the changed tokens' df all
   * shift); what an incremental design must avoid is re-reading and

@@ -104,13 +104,15 @@ object CorpusArtifacts {
 
   private val fingerprintCache = new DfMemo
 
-  /** BM25 index (inverted index, doc lengths, corpus stats), built
-    * eagerly from [[tokens]] and persisted. `key` identifies the
-    * corpus version — at cluster scale the ingest run id; here the sf
+  /** BM25 index, built eagerly from [[tokens]]. Only its impact frame
+    * is persisted; the postings and document lengths are projections
+    * of the stored token frame, and the corpus stats a local relation
+    * ([[Search.buildIndexFromTokens]]). `key` identifies the corpus
+    * version — at cluster scale the ingest run id; here the sf
     * directory. Per-key compute: cache hits never block behind
-    * another corpus's build. Bm25Index entries carry four persisted
-    * frames, so they get the same session validation as [[DfMemo]]
-    * via the index frame. */
+    * another corpus's build. Entries get the same session validation
+    * as [[DfMemo]] via the index frame, and [[reset]] unpersists all
+    * four frames. */
   def bm25Index(key: String, df: => DataFrame, idCol: String,
       textCol: String): Search.Bm25Index =
     bm25Cache.compute(key, (_, cur) =>

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Partitioning
-import graft.functions.TextFunctions
+import graft.functions.{NativeText, TextFunctions}
 
 /** Lexical (BM25) search and hybrid reciprocal-rank fusion.
   *
@@ -14,11 +14,13 @@ import graft.functions.TextFunctions
   *    norm vs average: app/services/search_service.py:287-368.
   *  - RRF fusion score = Σ_sources 1/(60 + rank): search_service.py:370-423.
   *
-  * Spark-first shape: the inverted index (doc, term, tf) is a
-  * precomputed DataFrame (one explode + groupBy at ingest — amortized);
-  * a query is then `terms ⋈ index` (query terms broadcast — tiny) +
-  * one groupBy(doc). Corpus stats (N, avgdl) are scalar aggregates the
-  * optimizer evaluates once. No per-query full-text scan at 100 TB.
+  * Spark-first shape: the index is built once per corpus from the
+  * stored token frame in one narrow pass (per-document term counts,
+  * no shuffle of the postings) plus a vocab-sized df aggregate; the
+  * corpus stats (N, avgdl) are observed on the same scan. Only the
+  * impact frame (id, token, term_score) is persisted, sorted by token
+  * within each partition. A query is then `filter(token ∈ terms)` on
+  * it + one groupBy(doc). No per-query full-text scan at 100 TB.
   */
 object Search {
 
@@ -26,11 +28,20 @@ object Search {
     * (contextual_retrieval_schema.sql:33 bm25_statistics analogue).
     * Build once per corpus version, score many queries against it.
     *
-    * `impacts` is the impact-ordered form: per (doc, token) the full
-    * BM25 term contribution (idf × tf-saturation × length-norm) is
-    * already folded in at the DEFAULT k1/b, so a query is
-    * `filter(token ∈ terms) → groupBy(doc).sum` — one shuffle, no
-    * joins, no corpus scan. Standard top-k search index shape. */
+    *  - `idx`: the postings (id, token, tf), one row per distinct
+    *    token of a document.
+    *  - `dls`: (id, dl), the document lengths.
+    *  - `stats`: one row (n_docs, avgdl).
+    *  - `impacts`: (id, token, term_score), per posting the full BM25
+    *    term contribution (idf × tf-saturation × length-norm) already
+    *    folded in at the DEFAULT k1/b, so a query is
+    *    `filter(token ∈ terms) → groupBy(doc).sum`: one shuffle, no
+    *    joins, no corpus scan. Standard top-k search index shape.
+    *
+    * Of an eager build only `impacts` is persisted: `idx` and `dls`
+    * are projections of the token base and `stats` is a local
+    * relation. Releasing an index unpersists all four frames; that is
+    * a no-op on the three that hold no cache entry. */
   final case class Bm25Index(idx: DataFrame, dls: DataFrame, stats: DataFrame,
       impacts: DataFrame, idCol: String)
 
@@ -47,54 +58,85 @@ object Search {
 
   /** Build the reusable index from a [[tokenBase]] frame; the caller
     * owns the base's lifecycle (persist it when several consumers read
-    * it — the lazy frames reference it 4-5× per query plan — as
-    * CorpusArtifacts does).
+    * it, as CorpusArtifacts does).
     *
-    * `eager = true` is the ingest-job mode: the four output frames are
-    * persisted and materialized NOW, so the returned index holds only
-    * the compact artifacts and no query re-reads the base. */
+    * Key contract: every id of the base is non-null and sits on one
+    * row. A PK-merged token base ([[graft.incremental.IncrementalIndex]])
+    * and a corpus keyed by its primary key hold it. Under it the
+    * postings are unique per (id, token), so `count(1)` per token is
+    * the document frequency.
+    *
+    * The postings come from one narrow pass: each row's term counts
+    * ([[NativeText.termCountsOf]]) explode with the row's `dl`
+    * alongside, so no (id, token) groupBy and no join back to the
+    * document lengths is needed. df is a vocab-sized `count(1)` per
+    * token, and both faces score `postings ⋈ broadcast(df)` with the
+    * corpus scalars attached through the one `termScores`
+    * expression.
+    *
+    * `eager = false` returns lazy frames over the base; the scalars
+    * come from a broadcast cross join with `stats`.
+    *
+    * `eager = true` is the ingest-job mode. One aggregate job collects
+    * df into a local relation, and an observation on the same scan
+    * yields N and avg(dl), so `stats` is local too and the scalars
+    * enter the impact expression as literals. Then `impacts`, sorted
+    * by token within each of the base's partitions, is persisted and
+    * materialized; nothing else is. The in-memory columnar scan keeps
+    * per-batch min/max stats, so a query's `token IN (...)` filter
+    * prunes whole cached batches instead of scanning the corpus-sized
+    * index.
+    *
+    * Both faces sum a document's score in token order: its postings
+    * come out of `termCountsOf` in token order and stay in one
+    * partition, and the eager face's sort keeps them in that order.
+    * So two eager builds and the lazy face of one base score
+    * bit-identically. */
   def buildIndexFromTokens(base: DataFrame, idCol: String,
       eager: Boolean = false): Bm25Index = {
-    val idx = base
-      .select(col(idCol), explode(col("_toks")).as("token"))
-      .groupBy(col(idCol), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val dls = base.select(col(idCol), col("dl"))
-    val stats = dls.agg(count(lit(1)).cast("double").as("n_docs"),
+    def postingsOf(b: DataFrame): DataFrame =
+      b.select(col(idCol), col("dl"),
+          explode(NativeText.termCountsOf(col("_toks"))).as("_tc"))
+        .select(col(idCol), col("_tc.token").as("token"), col("_tc.tf").as("tf"),
+          col("dl"))
+    // a map-side-combinable aggregate: only vocab-sized partials
+    // shuffle. Deliberately not a count().over(partitionBy(token))
+    // window, which would shuffle every posting and hold a stopword's
+    // rows in one partition AQE cannot split.
+    def docFreq(p: DataFrame): DataFrame =
+      p.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    val statCols = Seq(count(lit(1)).cast("double").as("n_docs"),
       avg(col("dl")).as("avgdl"))
-    // df per token: (id, token) rows are unique after the tf groupBy,
-    // so count(1) per token IS the document frequency — a map-side-
-    // combinable aggregate (only vocab-sized partials shuffle, unlike
-    // the old countDistinct's Expand + double shuffle) joined back to
-    // the postings. Deliberately NOT a count().over(partitionBy(token))
-    // window: that shuffles the FULL postings frame by token and
-    // buffers each token's rows in one unsplittable window partition —
-    // a stopword token at corpus scale becomes a straggler AQE cannot
-    // split (it can for joins, not windows).
-    val impacts = termScores(
-      idx.join(idx.groupBy(col("token")).agg(count(lit(1)).as("df")),
-          Seq("token"))
-        .join(dls, Seq(idCol))
-        .crossJoin(broadcast(stats)),
-      defaultK1, defaultB)
-      .select(col(idCol), col("token"), col("term_score"))
+    def impactsOf(p: DataFrame, df: DataFrame,
+        withStats: DataFrame => DataFrame): DataFrame =
+      termScores(withStats(p.join(broadcast(df), Seq("token"))), defaultK1, defaultB)
+        .select(col(idCol), col("token"), col("term_score"))
+    val postings = postingsOf(base)
+    val idx = postings.select(col(idCol), col("token"), col("tf"))
+    val dls = base.select(col(idCol), col("dl"))
+    val stats = dls.agg(statCols.head, statCols.tail: _*)
     if (eager) {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // Range-partition + sort the impact index by token before
-      // caching: the in-memory columnar scan keeps per-batch min/max
-      // stats, so a query's `token IN (...)` filter PRUNES whole
-      // cached batches instead of scanning the corpus-sized index
-      // (sf1 measured: q23 0.49 s → ~0.2 s warm; the same layout a
-      // storage-backed index would get from token-bucketed files).
-      // One extra shuffle at INGEST time, amortized over every query.
-      val impactsSorted = impacts
-        .repartitionByRange(col("token"))
+      val spark = base.sparkSession
+      val observed = Observation()
+      val dfFrame = docFreq(postingsOf(
+        base.observe(observed, statCols.head, statCols.tail: _*)))
+      val df = spark.createDataFrame(
+        java.util.Arrays.asList(dfFrame.collect(): _*), dfFrame.schema)
+      val m = observed.get
+      // the optimizer drops the observation of a provably empty base
+      val statRow = if (m.isEmpty) stats.head() else Row(m("n_docs"), m("avgdl"))
+      val impacts = impactsOf(postings, df, _.select(col("*"),
+          lit(statRow.get(0)).as("n_docs"),
+          lit(statRow.get(1)).cast("double").as("avgdl")))
         .sortWithinPartitions("token")
-      val out = Bm25Index(idx.persist(lvl), dls.persist(lvl),
-        stats.persist(lvl), impactsSorted.persist(lvl), idCol)
-      out.idx.count(); out.dls.count(); out.stats.count(); out.impacts.count()
-      out
-    } else Bm25Index(idx, dls, stats, impacts, idCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      impacts.count()
+      Bm25Index(idx, dls,
+        spark.createDataFrame(java.util.Arrays.asList(statRow), stats.schema),
+        impacts, idCol)
+    } else
+      Bm25Index(idx, dls, stats,
+        impactsOf(postings, docFreq(postings), _.crossJoin(broadcast(stats))), idCol)
   }
 
   /** The BM25 per-(doc,token) contribution. One expression tree shared
@@ -127,8 +169,9 @@ object Search {
         .agg(sum(col("term_score")).as("score"))
     else {
       val matched = index.idx.where(col("token").isin(qt: _*))
-      val dfreq = matched.groupBy(col("token"))
-        .agg(countDistinct(col(index.idCol)).as("df"))
+      // postings are unique per (id, token) (the build's key
+      // contract), so count(1) per token is its document frequency
+      val dfreq = matched.groupBy(col("token")).agg(count(lit(1)).as("df"))
       termScores(
         matched.join(broadcast(dfreq), Seq("token"))
           .join(index.dls, Seq(index.idCol))
