@@ -5,8 +5,10 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 
 /** The diagnostic main: `graft.Profile [--explain] [names…]` over the
@@ -18,9 +20,13 @@ import org.apache.spark.sql.execution.ExplainMode
   * t1 only), then once more under a listener. The `PROF` line gives
   * that run's wall, jobs, stages, tasks, summed task time, GC, shuffle
   * read/write, and the worst stage's max/median task time (`skew`, over
-  * stages of at least two tasks); a `STAGE` line per stage lists its
-  * tasks, median and max. Wall ≫ taskSec/cores means scheduling
-  * overhead (fewer stages help); taskSec ≈ wall × cores means compute.
+  * stages of at least two tasks), and the generated classes the run
+  * compiled (`compiles`, `compile_ms`: Spark's JVM-wide codegen
+  * counters, read before and after, so they add no job; a warm query
+  * whose classes stay in the class cache compiles 0); a `STAGE` line
+  * per stage lists its tasks, median and max. Wall ≫ taskSec/cores
+  * means scheduling overhead (fewer stages help); taskSec ≈ wall ×
+  * cores means compute.
   *
   * `--explain` instead prints each query's formatted physical plan
   * after one warm run, so a persisted artifact that a warm bench cell
@@ -75,17 +81,25 @@ object Profile {
     val c = new Counters
     sc.addSparkListener(c)
     try {
+      val (compiles0, compileNs0) = compiled
       val t0 = System.nanoTime()
       inGroup(Group)(body)
       val wall = (System.nanoTime() - t0) / 1e9
+      val (compiles1, compileNs1) = compiled
       // the bus delivers events in order: once the marker job's end
       // reaches the listener, so has every event of the run before it
       inGroup(Marker)(sc.parallelize(Seq(1), 1).count())
       require(c.markerEnd.await(10, TimeUnit.SECONDS),
         s"$n: the listener bus did not drain in 10 s")
-      c.lines(n, wall)
+      c.lines(n, wall, compiles1 - compiles0, (compileNs1 - compileNs0) / 1e6)
     } finally sc.removeSparkListener(c)
   }
+
+  /** Classes compiled in this JVM so far, and their compile time in
+    * ns: both are updated by each miss of Spark's class cache, on the
+    * driver and in local-mode tasks alike. */
+  private def compiled: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** Job, stage and task counters over the jobs of job group
     * [[Group]]; the end of a [[Marker]] job opens `markerEnd`. */
@@ -127,11 +141,12 @@ object Profile {
       if (d.size % 2 == 1) d(d.size / 2).toDouble
       else (d(d.size / 2 - 1) + d(d.size / 2)) / 2.0
 
-    def lines(n: String, wall: Double): Seq[String] = synchronized {
+    def lines(n: String, wall: Double, compiles: Long,
+        compileMs: Double): Seq[String] = synchronized {
       val perStage = durations.toSeq.sortBy(_._1).map { case (id, d) => (id, d.sorted.toIndexedSeq) }
       val skew = perStage.collect { case (_, d) if d.size >= 2 =>
         d.last / math.max(median(d), 1.0) }.maxOption.getOrElse(1.0)
-      f"PROF $n%-30s wall=$wall%6.3f jobs=$jobs%2d stages=$stages%3d tasks=$tasks%4d taskSec=${taskMs / 1e3}%8.2f gcSec=${gcMs / 1e3}%5.2f shufR=${shufRead / 1024}%8dKiB shufW=${shufWrite / 1024}%8dKiB skew=$skew%5.2f" +:
+      f"PROF $n%-30s wall=$wall%6.3f jobs=$jobs%2d stages=$stages%3d tasks=$tasks%4d taskSec=${taskMs / 1e3}%8.2f gcSec=${gcMs / 1e3}%5.2f shufR=${shufRead / 1024}%8dKiB shufW=${shufWrite / 1024}%8dKiB skew=$skew%5.2f compiles=$compiles%3d compile_ms=$compileMs%7.1f" +:
         perStage.map { case (id, d) =>
           f"STAGE $n%-30s stage=$id%4d tasks=${d.size}%4d medianMs=${median(d)}%8.1f maxMs=${d.last}%6d" }
     }

@@ -3,11 +3,13 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, EmptyBlock, ExprCode, FalseLiteral, JavaCode, TrueLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the dedup hot path.
@@ -48,6 +50,12 @@ object NativeText {
     * shuffle (see [[TermCountsExpr]]). */
   def termCountsOf(tokens: Column): Column =
     GraftColumnBridge.column(TermCountsExpr(GraftColumnBridge.expression(tokens)))
+
+  /** Column API: a per-call double constant that generated code reads
+    * from its reference array rather than inlining (see
+    * [[ReferencedDoubleExpr]]); `null` is a NULL double. */
+  def referencedDouble(value: java.lang.Double): Column =
+    GraftColumnBridge.column(ReferencedDoubleExpr(value))
 
   private[functions] def buildShingles(arr: ArrayData, n: Int,
       distinct: Boolean): Array[UTF8String] = {
@@ -290,6 +298,29 @@ case class TermCountsExpr(child: Expression)
 object TermCountsExpr {
   private val TokenOrder: java.util.Comparator[UTF8String] =
     java.util.Comparator.nullsFirst[UTF8String]((a, b) => a.binaryCompare(b))
+}
+
+/** A double constant bound into generated code through
+  * `ctx.addReferenceObj`: the compiled class reads it from the
+  * `references` array it is instantiated with, so the code body is
+  * the same for every value, and plans that differ only in this value
+  * share one class in Spark's class cache. A `lit` inlines its value
+  * (`5012.0D`), so each new value compiles a new class. Not foldable,
+  * so the optimizer keeps it rather than folding it into a literal;
+  * evaluation is otherwise a literal's, bit for bit. */
+case class ReferencedDoubleExpr(value: java.lang.Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = value == null
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (value == null) ev.copy(code = EmptyBlock, isNull = TrueLiteral,
+      value = JavaCode.defaultLiteral(DoubleType))
+    else {
+      val ref = ctx.addReferenceObj("scalar", value, "java.lang.Double")
+      ev.copy(code = code"final double ${ev.value} = $ref.doubleValue();",
+        isNull = FalseLiteral)
+    }
+  override def prettyName: String = "graft_referenced_double"
 }
 
 /** MinHash signature over n-gram shingles: element k = min over the

@@ -80,7 +80,11 @@ object Search {
     * `eager = true` is the ingest-job mode. One aggregate job collects
     * df into a local relation, and an observation on the same scan
     * yields N and avg(dl), so `stats` is local too and the scalars
-    * enter the impact expression as literals. Then `impacts`, sorted
+    * enter the impact expression as constants that generated code
+    * reads from its reference array
+    * ([[NativeText.referencedDouble]]): the compiled class is the same
+    * for every corpus, so a rebuild reuses it instead of compiling the
+    * literal-specialized one anew. Then `impacts`, sorted
     * by token within each of the base's partitions, is persisted and
     * materialized; nothing else is. The in-memory columnar scan keeps
     * per-batch min/max stats, so a query's `token IN (...)` filter
@@ -126,8 +130,8 @@ object Search {
       // the optimizer drops the observation of a provably empty base
       val statRow = if (m.isEmpty) stats.head() else Row(m("n_docs"), m("avgdl"))
       val impacts = impactsOf(postings, df, _.select(col("*"),
-          lit(statRow.get(0)).as("n_docs"),
-          lit(statRow.get(1)).cast("double").as("avgdl")))
+          NativeText.referencedDouble(statRow.getAs[java.lang.Double](0)).as("n_docs"),
+          NativeText.referencedDouble(statRow.getAs[java.lang.Double](1)).as("avgdl")))
         .sortWithinPartitions("token")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       impacts.count()

@@ -194,6 +194,31 @@ class Bm25BuildSpec extends AnyFunSuite {
     }
   }
 
+  test("a second eager build over a base with other N and avg(dl) compiles " +
+      "no class") {
+    val bases = Seq(sf0001, sf0001.where(col("doc_id") % 3 =!= 0)).map { d =>
+      val b = Search.tokenBase(d, "doc_id", "text").persist()
+      b.count()
+      b
+    }
+    var built = Seq.empty[Search.Bm25Index]
+    try {
+      Compiles.during {
+        built :+= Search.buildIndexFromTokens(bases(0), "doc_id", eager = true)
+      }
+      val second = Compiles.during {
+        built :+= Search.buildIndexFromTokens(bases(1), "doc_id", eager = true)
+      }
+      val stats = built.map(_.stats.head())
+      assert(stats(0).getDouble(0) !== stats(1).getDouble(0))
+      assert(stats(0).getDouble(1) !== stats(1).getDouble(1))
+      assert(second === 0)
+    } finally {
+      built.foreach(release)
+      bases.foreach(_.unpersist())
+    }
+  }
+
   test("an eager index keeps each document's impacts in one partition, " +
       "token-sorted, and two builds and the lazy face score bit-identically") {
     val base = Search.tokenBase(sf0001, "doc_id", "text").persist()

@@ -18,6 +18,7 @@ object TestSession {
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.session.timeZone", "UTC")
       .config(Tables.nanosConf._1, Tables.nanosConf._2)
+      .config(Sessions.codegenCacheConf._1, Sessions.codegenCacheConf._2)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -33,6 +33,17 @@ class ProfileSpec extends AnyFunSuite {
     }
   }
 
+  test("a second listened run of a warm query compiles no class") {
+    val q = "q09_bm25_tokens"
+    val Compiled = """compiles=\s*(\d+) compile_ms=\s*([\d.]+)""".r.unanchored
+    val runs = (1 to 2).map(_ => Profile.run(spark, dir, Seq(q), explain = false)(1))
+    runs.foreach(l => assert(Compiled.matches(l), l))
+    runs(1) match { case Compiled(c, ms) =>
+      assert(c.toInt === 0, runs(1))
+      assert(ms.toDouble === 0.0, runs(1))
+    }
+  }
+
   test("--explain shows the persisted BM25 index the warm q09 reads") {
     val lines = Profile.run(spark, dir, Seq("q09_bm25_tokens"), explain = true)
     assert(lines.head.contains("q09_bm25_tokens"))
