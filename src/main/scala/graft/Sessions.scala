@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * Local mode mirrors the cluster posture: AQE on (runtime coalescing
   * + skew-join handling), UTC, nanosecond-parquet readability for the
   * events table, the graft_* SQL functions registered, and a class
-  * cache sized to the library's working set ([[codegenCacheConf]]). On
+  * cache sized to the library's working set ([[codegenCacheConf]]) whose
+  * whole-stage classes are reused across stage numbers
+  * ([[codegenClassNameConf]]). On
   * a real cluster the same builder applies with `master` unset and
   * shuffle.partitions sized to ~2-3× total cores (AQE coalesces the
   * excess); `spark.sql.files.maxPartitionBytes` stays default 128 MB
@@ -38,6 +40,21 @@ object Sessions {
   val codegenCacheConf: (String, String) =
     ("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
+  /** Whole-stage classes are named without their stage number.
+    *
+    * By default each generated class is named after its stage id
+    * (`GeneratedIteratorForCodegenStage7`), and the id is part of the
+    * code the class cache is keyed on. AQE re-plans a query stage by
+    * stage and numbers the stages afresh, so the same pipeline comes
+    * back under another number and Janino compiles it again: 4–18
+    * classes per churn change batch after the first, each compiled
+    * before. With the id out of the name, a pipeline compiled once is
+    * reused under any stage number. The id stays in the generated
+    * code's comments, which the cache key leaves out. A fixed posture,
+    * set wherever [[codegenCacheConf]] is. */
+  val codegenClassNameConf: (String, String) =
+    ("spark.sql.codegen.useIdInClassName", "false")
+
   def localBuilder(cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
@@ -46,6 +63,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config(Tables.nanosConf._1, Tables.nanosConf._2)
       .config(codegenCacheConf._1, codegenCacheConf._2)
+      .config(codegenClassNameConf._1, codegenClassNameConf._2)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
 

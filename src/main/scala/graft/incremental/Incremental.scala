@@ -1,6 +1,6 @@
 package graft.incremental
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,6 +23,19 @@ import org.apache.spark.sql.types._
   * Tracking row: (source_key, ordinal, content_hash, logic_fp,
   * target_keys). Stored as parquet; the same logic runs unchanged over
   * a Delta table at cluster scale.
+  *
+  * A batch commits from one classified delta (the Structured Streaming
+  * micro-batch shape: build the delta once, write it idempotently).
+  * One aggregate over the upserts, the deletes and the stored tracking
+  * rows of the batch's keys labels each changed key evaluate, bump or
+  * delete, carrying its last-wins upsert and its stored row; the frame
+  * is materialized once, and its counts are observed on that job. The
+  * sink and the tracking table then take one merge each: `process`
+  * runs over the evaluate rows only, and the stale target keys come
+  * from the stored `target_keys` the delta carries. Both writes swap
+  * by rename-aside ([[ParquetSink]]), so a crash mid-swap leaves the
+  * previous version readable; the two writes are not one transaction.
+  * [[diff]] states the same per-key laws as a join over tracking.
   */
 object Incremental {
 
@@ -45,7 +58,7 @@ object Incremental {
     col("`" + name.replace("`", "``") + "`")
 
   def readTracking(spark: SparkSession, path: String): DataFrame =
-    ParquetSink.read(spark, path).getOrElse(emptyTracking(spark))
+    ParquetSink.read(spark, path, trackingSchema).getOrElse(emptyTracking(spark))
 
   /** The per-run delta of a keyed source versus the tracking state.
     *
@@ -210,133 +223,177 @@ object Incremental {
     sync(spark, batch, process, logicFp, connector, target, trackingPath,
       fullSnapshot = false, deletedSourceKeys = Some(deletedKeys))
 
+  /** Runs `df`'s plan once, filling its cache entry: one job, where
+    * `count()` adds an aggregate exchange. */
+  private def materialize(df: DataFrame): Unit =
+    df.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
+
+  private val Evaluate = "evaluate"
+  private val Bump = "bump"
+  private val Delete = "delete"
+
+  /** One row per source key the batch changes, from one aggregate:
+    * `source_key`, `_op` (evaluate / bump / delete), `_u` (the
+    * last-wins upsert, every batch column) and `_t` (the stored
+    * tracking row). Keys the batch leaves as they are have no row.
+    *
+    * The upserts, the deletes and the tracking rows are unioned and
+    * grouped once by `source_key`. A full snapshot takes every
+    * tracking row (a tracked key with no upsert is deleted); a change
+    * stream takes only the rows of its own keys, by a broadcast
+    * semi-join.
+    *
+    * The per-key laws, as [[diff]] and [[applyChangeStreamTo]] state
+    * them:
+    *  - last-wins: `max_by` over (ordinal, content_hash, every payload
+    *    column cast to string in name order). An ascending struct
+    *    order sorts a null field first, so the max is
+    *    [[lastWinsPerKey]]'s "desc nulls last" pick.
+    *  - the delete arm: one delete per key at its max ordinal; an
+    *    upsert survives it only when strictly newer, and a surviving
+    *    delete drops the stored row unless that row is strictly newer.
+    *    A delete with no ordinal (or a delete stream with no ordinal
+    *    column) is never skippable.
+    *  - the stored-row comparison of [[diff]]: evaluate a new key or a
+    *    fresh row whose content or logic changed; bump the ordinal of
+    *    a newer row with both unchanged; drop a stale row. */
+  private def classify(upserts: DataFrame, deletes: Option[DataFrame],
+      tracking: DataFrame, logicFp: String, fullSnapshot: Boolean): DataFrame = {
+    val payload = upserts.columns
+      .filterNot(Set("source_key", "ordinal", "content_hash")).sorted.toSeq
+    val u0 = struct(upserts.columns.toSeq.map(c => quotedCol(c).as(c)): _*)
+    val order = struct(col("ordinal") +: col("content_hash") +:
+      payload.map(c => quotedCol(c).cast("string")): _*)
+    val t0 = struct(col("ordinal"), col("content_hash"), col("logic_fp"),
+      col("target_keys"))
+    def typeOf(c: org.apache.spark.sql.Column, df: DataFrame) =
+      df.select(c).schema.head.dataType
+    val (uType, orderType, tType) =
+      (typeOf(u0, upserts), typeOf(order, upserts), typeOf(t0, tracking))
+    def arm(df: DataFrame, u: Boolean, d: Boolean, t: Boolean) = df.select(
+      col("source_key"),
+      (if (u) u0 else lit(null).cast(uType)).as("_u"),
+      (if (u) order else lit(null).cast(orderType)).as("_order"),
+      (if (!d) lit(null).cast("long")
+       else if (df.columns.contains("ordinal")) col("ordinal").cast("long")
+       else lit(null).cast("long")).as("_d_ord"),
+      lit(d).as("_d"),
+      (if (t) t0 else lit(null).cast(tType)).as("_t"))
+    val batchKeys = deletes.fold(upserts.select("source_key"))(d =>
+      upserts.select("source_key").unionByName(d.select("source_key")))
+    val stored =
+      if (fullSnapshot) tracking
+      else tracking.join(broadcast(batchKeys), Seq("source_key"), "left_semi")
+    val arms = Seq(arm(upserts, u = true, d = false, t = false)) ++
+      deletes.map(arm(_, u = false, d = true, t = false)) :+
+      arm(stored, u = false, d = false, t = true)
+    val g = arms.reduce(_ union _).groupBy(col("source_key")).agg(
+      max_by(col("_u"), col("_order")).as("_u"),
+      max(col("_d_ord")).as("_d_ord"),
+      max(col("_d")).as("_d"),
+      first(col("_t"), ignoreNulls = true).as("_t"))
+
+    val (u, t, dOrd) = (col("_u"), col("_t"), col("_d_ord"))
+    val (uOrd, tOrd) = (u.getField("ordinal"), t.getField("ordinal"))
+    val hasDel = col("_d")
+    // an upsert strictly newer than its key's delete (never when
+    // either ordinal is unknown)
+    val upNewer = dOrd.isNotNull && uOrd.isNotNull && uOrd > dOrd
+    val storedNewer = tOrd.isNotNull && dOrd.isNotNull && tOrd > dOrd
+    val upLive = u.isNotNull && (!hasDel || upNewer)
+    val isNew = tOrd.isNull
+    // null-safe: a null-vs-value hash reads as changed
+    val contentChanged = !(u.getField("content_hash") <=> t.getField("content_hash"))
+    val logicChanged = t.getField("logic_fp") =!= lit(logicFp)
+    val evaluate = upLive && (isNew || (uOrd >= tOrd && (contentChanged || logicChanged)))
+    val bump = upLive && !isNew && uOrd > tOrd && !contentChanged && !logicChanged
+    val delete = t.isNotNull &&
+      (if (fullSnapshot) u.isNull else hasDel && !upNewer && !storedNewer)
+    g.select(col("source_key"),
+        when(evaluate, Evaluate).when(bump, Bump).when(delete, Delete).as("_op"),
+        u, t)
+      .where(col("_op").isNotNull)
+  }
+
+  /** One sync, committed from one classified delta ([[classify]]):
+    * the classification is materialized once, its evaluate / bump /
+    * delete counts observed on that same job, and every later step
+    * reads it. An idle batch stops there. Otherwise `process` runs
+    * over the evaluate rows, the stale target keys come from the
+    * stored `target_keys` the delta carries, and the sink and the
+    * tracking table each take one [[ParquetSink.merge]]-shaped write. */
   private def sync(spark: SparkSession, source: DataFrame,
       process: DataFrame => DataFrame, logicFp: String,
       connector: graft.sinks.TargetConnector, target: String,
       trackingPath: String, fullSnapshot: Boolean,
       deletedSourceKeys: Option[DataFrame] = None): Long = {
-    val tracking = readTracking(spark, trackingPath)
+    val counts = Observation()
+    def counted(op: String) = count(when(col("_op") === op, lit(1))).as(op)
+    val delta = classify(source, deletedSourceKeys,
+        readTracking(spark, trackingPath), logicFp, fullSnapshot)
+      .observe(counts, counted(Evaluate), counted(Bump), counted(Delete))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      materialize(delta)
+      // the optimizer drops the observation of a provably empty delta
+      val n = counts.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+        .withDefaultValue(0L)
+      // idle-batch fast path (r17 review pass 11): nothing to
+      // evaluate, bump or delete leaves the state exactly as it is, so
+      // neither table is rewritten
+      if (n(Evaluate) + n(Bump) + n(Delete) == 0) return 0L
 
-    // Cross-arm batch resolution (see applyChangeStreamTo's scaladoc
-    // for the reference law): adjudicate same-key upsert-vs-delete by
-    // ordinal BEFORE diffing, then ordinal-guard surviving deletes
-    // against the stored row so a stale replay never drops newer data.
-    val (upserts, explicitDeletes) = deletedSourceKeys match {
-      case None => (source, None)
-      case Some(rawKeys) if !rawKeys.columns.contains("ordinal") =>
-        // no ordinals on the delete stream: never skippable
-        // (row_indexer.rs:117-124) — the delete wins everywhere
-        val delKeys = rawKeys.select("source_key").distinct()
-        (source.join(delKeys, Seq("source_key"), "left_anti"),
-          Some(tracking.join(delKeys, Seq("source_key"), "left_semi")))
-      case Some(rawKeys) =>
-        // in-arm last-wins: one (max-ordinal) delete per key; max()
-        // ignores nulls, so a key deleted at both a known and an
-        // unknown ordinal adjudicates by the known one
-        val del = rawKeys.groupBy("source_key")
-          .agg(max(col("ordinal")).as("_d_ord"))
-          .withColumn("_d_present", lit(true))
-        // an upsert survives only if STRICTLY newer than the key's
-        // delete (tie → delete wins; unadjudicable → delete wins)
-        val up = source.join(del, Seq("source_key"), "left")
-          .where(col("_d_present").isNull ||
-            (col("_d_ord").isNotNull && col("ordinal").isNotNull &&
-              col("ordinal") > col("_d_ord")))
-          .drop("_d_ord", "_d_present")
-        // a delete survives unless a same-batch upsert is strictly
-        // newer...
-        val upMax = source.groupBy("source_key")
-          .agg(max(col("ordinal")).as("_u_ord"))
-        val liveDel = del.join(upMax, Seq("source_key"), "left")
-          .where(!(col("_u_ord").isNotNull && col("_d_ord").isNotNull &&
-            col("_u_ord") > col("_d_ord")))
-          .select("source_key", "_d_ord")
-        // ...and drops the stored row only when the stored ordinal is
-        // not strictly newer (the replayed-stale-delete guard)
-        val toDel = tracking.join(liveDel, Seq("source_key"))
-          .where(!(col("ordinal").isNotNull && col("_d_ord").isNotNull &&
-            col("ordinal") > col("_d_ord")))
-          .drop("_d_ord")
-        (up, Some(toDel))
-    }
+      def op(o: String) = delta.where(col("_op") === o)
+      val evaluated = op(Evaluate).select(source.columns.toSeq.map(c =>
+        col("_u").getField(c).as(c)): _*)
+      val outputs = process(evaluated).cache()
+      try {
+        // materialized here, so the writes below plan their joins
+        // against its measured size
+        materialize(outputs)
+        // exact stale-key deletion: the stored keys of re-evaluated and
+        // deleted sources, minus this run's keys
+        //
+        // CONTRACT (r18, pinned against the reference's precommit
+        // keyset law): target keys are NOT shared across source keys.
+        // The reference tracks target keys PER source key and deletes a
+        // source row's legacy keys unconditionally — a key absent from
+        // THAT row's new output is staged for deletion with no check
+        // against other rows' keysets (row_indexer.rs:151-153 keyed by
+        // TargetKeyPair within one source row, :353-386 legacy-key
+        // deletion) — so a target key emitted by two source keys is
+        // clobbered there exactly as it would be here. Every library
+        // process() derives target_key injectively from source_key
+        // (chunk ids, etc.); a violating process() loses rows in BOTH
+        // engines, which is why this subtracts only this run's outputs.
+        val staleKeys = delta.where(col("_op") =!= Bump)
+          .select(explode(col("_t.target_keys")).as("target_key"))
+          .join(outputs.select("target_key"), Seq("target_key"), "left_anti")
+        connector.applyMutation(spark, target,
+          outputs.drop("source_key"), Seq("target_key"), Some(staleKeys))
 
-    val delta0 = diff(upserts, tracking, logicFp)
-    val delta =
-      if (fullSnapshot) delta0
-      else delta0.copy(toDelete =
-        explicitDeletes.getOrElse(emptyTracking(spark)))
-
-    val evaluated = delta.toEvaluate.cache()
-    val nEvaluated = evaluated.count()
-
-    // idle-batch fast path (r17 review pass 11): a micro-batch with
-    // nothing to evaluate, delete, or bump previously still rewrote
-    // the ENTIRE sink (ParquetSink.merge reads + swap-rewrites) and
-    // the whole tracking table — O(table) per idle trigger under the
-    // live updater. State is exactly unchanged, so skip both writes.
-    if (nEvaluated == 0 && delta.toDelete.isEmpty &&
-        delta.ordinalOnly.isEmpty) {
-      evaluated.unpersist()
-      return 0L
-    }
-
-    val outputs = process(evaluated).cache()
-
-    // new target keyset per evaluated source key (precommit record)
-    val newKeys = outputs.groupBy(col("source_key"))
-      .agg(collect_list(col("target_key")).as("target_keys"))
-    val evaluatedTracking = evaluated
-      .select(col("source_key"), col("ordinal"), col("content_hash"))
-      .join(newKeys, Seq("source_key"), "left")
-      .withColumn("target_keys",
-        coalesce(col("target_keys"), array().cast("array<string>")))
-      .withColumn("logic_fp", lit(logicFp))
-      .select("source_key", "ordinal", "content_hash", "logic_fp", "target_keys")
-
-    // exact stale-key deletion: (old keys of re-evaluated sources ∪
-    // keys of deleted sources) − new keys
-    //
-    // CONTRACT (r18, pinned against the reference's precommit keyset
-    // law): target keys are NOT shared across source keys. The
-    // reference tracks target keys PER source key and deletes a
-    // source row's legacy keys unconditionally — a key absent from
-    // THAT row's new output is staged for deletion with no check
-    // against other rows' keysets (row_indexer.rs:151-153 keyed by
-    // TargetKeyPair within one source row, :353-386 legacy-key
-    // deletion) — so a target key emitted by two source keys is
-    // clobbered there exactly as it would be here. Every library
-    // process() derives target_key injectively from source_key
-    // (chunk ids, etc.); a violating process() loses rows in BOTH
-    // engines, which is why this subtracts only this run's outputs.
-    val oldKeysOfEvaluated = tracking
-      .join(evaluated.select("source_key"), Seq("source_key"))
-      .select(explode(col("target_keys")).as("target_key"))
-    val keysOfDeleted = delta.toDelete
-      .select(explode(col("target_keys")).as("target_key"))
-    val staleKeys = oldKeysOfEvaluated.unionByName(keysOfDeleted)
-      .join(outputs.select("target_key"), Seq("target_key"), "left_anti")
-      .distinct()
-
-    connector.applyMutation(spark, target,
-      outputs.drop("source_key"), Seq("target_key"), Some(staleKeys))
-
-    // commit tracking: unchanged rows + ordinal bumps + evaluated rows,
-    // minus deleted sources
-    val bumpKeys = delta.ordinalOnly.select(
-      col("source_key"), col("ordinal").as("_new_ordinal"))
-    val untouched = tracking
-      .join(evaluatedTracking.select("source_key"), Seq("source_key"), "left_anti")
-      .join(delta.toDelete.select("source_key"), Seq("source_key"), "left_anti")
-      .join(bumpKeys, Seq("source_key"), "left")
-      .withColumn("ordinal", coalesce(col("_new_ordinal"), col("ordinal")))
-      .drop("_new_ordinal")
-      .select("source_key", "ordinal", "content_hash", "logic_fp", "target_keys")
-    ParquetSink.swapWrite(spark, trackingPath,
-      untouched.unionByName(evaluatedTracking))
-
-    evaluated.unpersist()
-    outputs.unpersist()
-    nEvaluated
+        // commit tracking: evaluated rows with their new keysets,
+        // ordinal bumps over the stored rows, deleted sources dropped
+        val newKeys = outputs.groupBy(col("source_key"))
+          .agg(collect_list(col("target_key")).as("target_keys"))
+        val evaluatedTracking = op(Evaluate)
+          .select(col("source_key"), col("_u.ordinal").as("ordinal"),
+            col("_u.content_hash").as("content_hash"))
+          .join(newKeys, Seq("source_key"), "left")
+          .select(col("source_key"), col("ordinal"), col("content_hash"),
+            lit(logicFp).as("logic_fp"),
+            coalesce(col("target_keys"), array().cast("array<string>")).as("target_keys"))
+        val bumped = op(Bump).select(col("source_key"),
+          col("_u.ordinal").as("ordinal"), col("_t.content_hash").as("content_hash"),
+          col("_t.logic_fp").as("logic_fp"), col("_t.target_keys").as("target_keys"))
+        def asTracking(df: DataFrame) = df.select(trackingSchema.fields.toSeq.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*)
+        ParquetSink.merge(spark, trackingPath,
+          asTracking(evaluatedTracking).unionByName(asTracking(bumped)),
+          Seq("source_key"), Some(op(Delete).select("source_key")))
+      } finally outputs.unpersist()
+      n(Evaluate)
+    } finally delta.unpersist()
   }
 }
 

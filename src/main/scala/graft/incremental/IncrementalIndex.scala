@@ -1,6 +1,7 @@
 package graft.incremental
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.operators.Search
 
@@ -25,26 +26,35 @@ import graft.operators.Search
   * re-tokenizing the unchanged 99.99% of a 100 TB corpus, and the
   * merged base avoids exactly that.
   *
-  * The parquet PK-merge swaps to Delta `MERGE INTO` on a cluster
-  * (ParquetSink scaladoc) — rewrite cost then becomes O(delta). */
+  * A sync is one write of the base through [[ParquetSink.merge]]: a
+  * rename-aside swap, so a crash mid-swap leaves the previous base,
+  * which [[index]] finds through [[ParquetSink.exists]]. The parquet
+  * PK-merge swaps to Delta `MERGE INTO` on a cluster (ParquetSink
+  * scaladoc) — rewrite cost then becomes O(delta). */
 object IncrementalIndex {
 
   /** Apply one change batch to the token-base artifact at `basePath`:
     * rows of `changedDocs` (`idCol`, `textCol`) re-tokenize — only
     * the delta — and merge by id; ids in `deletedIds` drop. Returns
-    * the number of documents (re)tokenized. */
+    * the number of documents (re)tokenized.
+    *
+    * One write, and no pass of its own: the row count is an
+    * [[org.apache.spark.sql.Observation]] on the tokenized delta,
+    * taken by the merge's write. The merge reads the delta twice, for
+    * its rows and for its keys; column pruning passes the observation,
+    * so only the rows branch tokenizes. (The observation sits above
+    * [[Search.tokenBase]]: after a `df.rdd` on an observed frame, as
+    * `Partitioning.spread` makes, the observation reads zeros.) */
   def syncTokenBase(spark: SparkSession, basePath: String,
       changedDocs: DataFrame, idCol: String, textCol: String,
       deletedIds: Option[DataFrame] = None): Long = {
-    // persist the delta: the count and the merge share one
-    // tokenization pass instead of re-evaluating the upstream lineage
-    val delta = Search.tokenBase(changedDocs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = delta.count()
-    ParquetSink.merge(spark, basePath, delta, Seq(idCol),
-      deletedIds.map(_.select(idCol)))
-    delta.unpersist()
-    n
+    val observed = Observation()
+    ParquetSink.merge(spark, basePath,
+      Search.tokenBase(changedDocs, idCol, textCol)
+        .observe(observed, count(lit(1)).as("n")),
+      Seq(idCol), deletedIds.map(_.select(idCol)))
+    // the optimizer drops the observation of a provably empty delta
+    observed.get.get("n").fold(0L)(_.asInstanceOf[Long])
   }
 
   /** The queryable index over the maintained base: vocab-sized

@@ -376,21 +376,24 @@ object Dedup {
     // band element (16x tokenizer+md5 blowup, interpreted)
     val sig = base
       .withColumn("_sig", NativeText.minhashOf(col("_toks"), n, numHashes))
-      // zero-shingle guard (r18 review): a doc with < n tokens (or
-      // NULL text) has an all-null signature, and concat_ws SKIPS
-      // nulls — every such doc bucketed as md5("b|"), pairing ALL
-      // near-empty docs with each other: a spurious giant component
-      // (catastrophic over-dedup on a real crawl, where empty-ish
-      // docs number millions) AND a quadratic hot bucket. The oracle
-      // law (no shingles → no signature rows → singleton) is what a
-      // null-headed signature maps to: drop the doc here.
-      .where(element_at(col("_sig"), 1).isNotNull)
     val buckets = transform(sequence(lit(0), lit(bands - 1)), b => {
       val parts = b.cast("string") +: (0 until rows).map(r =>
         element_at(col("_sig"), (b * rows + r + 1).cast("int")))
       struct(b.as("band"), md5(concat_ws("|", parts: _*)).as("bucket"))
     })
-    sig.select(col(idCol), explode(buckets).as("bb"))
+    // zero-shingle guard (r18 review): a doc with < n tokens (or
+    // NULL text) has an all-null signature, and concat_ws SKIPS
+    // nulls — every such doc bucketed as md5("b|"), pairing ALL
+    // near-empty docs with each other: a spurious giant component
+    // (catastrophic over-dedup on a real crawl, where empty-ish
+    // docs number millions) AND a quadratic hot bucket. The oracle
+    // law (no shingles → no signature rows → singleton) is what a
+    // null-headed signature maps to: the doc explodes to no bucket.
+    // The guard sits inside the explode, not in a filter: the
+    // optimizer pushes a filter below the projection by inlining
+    // `_sig`, which evaluated every signature twice.
+    sig.select(col(idCol),
+        explode(when(element_at(col("_sig"), 1).isNotNull, buckets)).as("bb"))
       .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
@@ -407,13 +410,20 @@ object Dedup {
     minhashCandidatePairs(
       lshBucketsFromTokens(base, idCol, n, numHashes, bands), idCol)
 
-  private def minhashCandidatePairs(bk: DataFrame, idCol: String): DataFrame = {
-    val a = bk.select(col(idCol).as("id_a"), col("band"), col("bucket"))
-    val b = bk.select(col(idCol).as("id_b"), col("band"), col("bucket"))
-    a.join(b, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-  }
+  /** Pairs of ids sharing a (band, bucket), each signature evaluated
+    * once: the buckets group their ids (null ids drop, a repeated id
+    * counts once), and each sorted list emits its pairs in order, the
+    * `id_a < id_b` of a bucket self-join. A self-join would evaluate
+    * the signatures once per side: the two sides' projections differ,
+    * so their exchanges are not reused. */
+  private def minhashCandidatePairs(bk: DataFrame, idCol: String): DataFrame =
+    bk.groupBy(col("band"), col("bucket"))
+      .agg(array_sort(collect_set(col(idCol))).as("_ids"))
+      .where(size(col("_ids")) > 1)
+      .select(col("_ids"), posexplode(col("_ids")).as(Seq("_i", "id_a")))
+      .select(col("id_a"), explode(slice(col("_ids"), col("_i") + 2,
+        size(col("_ids")) - col("_i") - 1)).as("id_b"))
+      .distinct()
 
   /** 64-bit SimHash lives in [[graft.functions.NativeText.simhashOf]]
     * (single-pass native expression); its HOF twin — the independent

@@ -15,9 +15,10 @@ object Compiles {
   }
 }
 
-/** The class-cache posture ([[Sessions.codegenCacheConf]]): a query
-  * shape compiled once stays compiled while more distinct shapes run
-  * than Spark's default capacity of 100 holds. */
+/** The class-cache posture ([[Sessions.codegenCacheConf]],
+  * [[Sessions.codegenClassNameConf]]): a query shape compiled once
+  * stays compiled while more distinct shapes run than Spark's default
+  * capacity of 100 holds, and under any stage number. */
 class CodegenCacheSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
@@ -42,5 +43,21 @@ class CodegenCacheSpec extends AnyFunSuite {
     val others = Compiles.during((1 to 150).foreach(shape))
     assert(others > 100, s"the 150 other shapes compiled only $others classes")
     assert(Compiles.during(shape(0)) === 0)
+  }
+
+  test("a pipeline re-planned under another stage number compiles no class") {
+    val b = Sessions.localBuilder(2)
+    val options = b.getClass.getMethod("options").invoke(b)
+      .asInstanceOf[scala.collection.Map[String, String]]
+    val (key, value) = Sessions.codegenClassNameConf
+    assert(options.get(key).contains(value))
+    assert(spark.conf.get(key) === value)
+    def pipeline = spark.range(16).select((col("id") * lit(104729L) + lit(0.25)).as("x"))
+    def other = spark.range(16).select((col("id") * lit(1299709L) + lit(0.75)).as("x"))
+    // alone, each pipeline is stage 1; under the union, the second
+    // child is numbered 2
+    pipeline.collect()
+    other.collect()
+    assert(Compiles.during(other.union(pipeline).collect()) === 0)
   }
 }

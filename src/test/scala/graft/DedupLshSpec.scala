@@ -116,4 +116,50 @@ class DedupLshSpec extends AnyFunSuite {
       Dedup.simhashHammingCandidates(docs, "doc_id", "text", 8, 8)
     }
   }
+
+  test("minhash candidates evaluate each signature once and equal the band-bucket self-join") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions._
+    import graft.functions.MinHashExpr
+    import spark.implicits._
+    // the self-join of the buckets the grouped form replaced
+    def selfJoin(bk: DataFrame): DataFrame = {
+      val a = bk.select(col("doc_id").as("id_a"), col("band"), col("bucket"))
+      val b = bk.select(col("doc_id").as("id_b"), col("band"), col("bucket"))
+      a.join(b, Seq("band", "bucket")).where(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b")).distinct()
+    }
+    def pairs(df: DataFrame): Seq[(Long, Long)] =
+      df.select("id_a", "id_b").as[(Long, Long)].collect().toSeq.sorted
+    // MinHash evaluations in the executed plan: query stages are
+    // walked into, a reused exchange is not
+    object Walk extends AdaptiveSparkPlanHelper {
+      def minhashes(p: SparkPlan): Int = collect(p) { case n => n }
+        .map(_.expressions.map(_.collect { case m: MinHashExpr => m }.size).sum).sum
+    }
+    val sf = Search.tokenBase(Tables.load(spark, "/root/testdata/sf0.001", "documents"),
+      "doc_id", "text")
+    // near-duplicate families, a repeated row, a NULL text and a
+    // document too short to shingle
+    val r = new scala.util.Random(5)
+    val words = (0 until 40).map(i => s"w$i")
+    val seeded = (0 until 300).flatMap { i =>
+      val body = Seq.fill(12 + r.nextInt(20))(words(r.nextInt(words.size)))
+      Seq((i.toLong, body.mkString(" ")),
+        (1000L + i, (body.take(body.size - 1) :+ "dup").mkString(" ")))
+    } ++ Seq((7L, "w1 w2 w3 w4 w5 w6 w7"), (2000L, null), (2001L, "w1 w2"))
+    val seededToks = Search.tokenBase(seeded.toDF("doc_id", "text").repartition(3),
+      "doc_id", "text")
+    for ((toks, numHashes, bands) <- Seq((sf, 16, 4), (sf, 32, 4), (seededToks, 16, 4),
+        (seededToks, 8, 8))) {
+      val got = Dedup.minhashCandidatesFromTokens(toks, "doc_id", 3, numHashes, bands)
+      val rows = pairs(got)
+      assert(Walk.minhashes(got.queryExecution.executedPlan) === 1)
+      assert(rows === pairs(selfJoin(
+        Dedup.lshBucketsFromTokens(toks, "doc_id", 3, numHashes, bands))))
+      assert(rows.nonEmpty)
+    }
+  }
 }

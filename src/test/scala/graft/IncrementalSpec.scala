@@ -1,13 +1,52 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import org.apache.spark.sql.DataFrame
+import scala.util.Random
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dataflow.Flow
-import graft.incremental.{Incremental, Memo, ParquetSink}
+import graft.incremental.{Incremental, IncrementalIndex, Memo, ParquetSink}
+
+object JobCount {
+  /** Spark jobs `body` starts from the calling thread, counted by a
+    * local property every job it starts inherits: AQE's stage jobs
+    * and the broadcast jobs too, which set a job group of their own.
+    * A one-task marker job drains the listener bus (events arrive in
+    * order, so once the marker's end is seen every job of `body` has
+    * been counted). */
+  def during[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val (key, counted, marker) = ("graft.jobcount", "body", "marker")
+    val jobs = new SparkListener {
+      @volatile var n = 0
+      @volatile var markerJob = -1
+      val markerEnd = new CountDownLatch(1)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `counted` => n += 1
+          case `marker` => markerJob = e.jobId
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerEnd.countDown()
+    }
+    sc.addSparkListener(jobs)
+    try {
+      sc.setLocalProperty(key, counted)
+      val out = try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(jobs.markerEnd.await(10, TimeUnit.SECONDS))
+      (out, jobs.n)
+    } finally sc.removeSparkListener(jobs)
+  }
+}
 
 class FlowSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -337,5 +376,121 @@ class IncrementalSpec extends AnyFunSuite {
       m.select(col("_fp"), lit("ok").as("value"))
     val r2 = Memo.cached(spark, s"$tmp/c2", in2, compute2)
     assert(r2.select($"value").as[String].collect().toSeq === Seq("ok"))
+  }
+
+  private type Up = (String, Option[Long], String, Option[String])
+
+  private def ups(rows: Seq[Up]): DataFrame =
+    rows.toDF("source_key", "ordinal", "content", "content_hash")
+
+  private def sinkRows(path: String): Option[Seq[(String, String)]] =
+    ParquetSink.read(spark, path).map(_.select("target_key", "chunk_text")
+      .as[(String, String)].collect().toSeq.sorted)
+
+  private def trackRows(path: String): Option[Seq[String]] =
+    ParquetSink.read(spark, path).map(_.select(concat_ws("|",
+        col("source_key"), coalesce(col("ordinal").cast("string"), lit("-")),
+        coalesce(col("content_hash"), lit("-")), col("logic_fp"),
+        concat_ws(",", sort_array(col("target_keys")))))
+      .as[String].collect().toSeq.sorted)
+
+  test("the one-pass commit equals the join-based sync over random batch sequences") {
+    val keys = (0 until 8).map(i => s"k$i")
+    val texts = Seq("", "short", "a medium body", "a longer body of text that spans chunks",
+      "another body!", "zzzz zzzz zzzz zzzz zzzz")
+    val kinds = Seq("snapshot", "changes", "stream", "stream-no-ordinal", "idle")
+    (1 to 4).foreach { seed =>
+      val r = new Random(seed)
+      val tmp = Files.createTempDirectory(s"incr-law-$seed").toString
+      val (sinkA, trackA) = (s"$tmp/a/sink", s"$tmp/a/tracking")
+      val (sinkB, trackB) = (s"$tmp/b/sink", s"$tmp/b/tracking")
+      def ordinal(): Option[Long] = if (r.nextInt(8) == 0) None else Some(1L + r.nextInt(6))
+      def upsert(): Up = {
+        val text = texts(r.nextInt(texts.size))
+        // hash ties with other payloads, and null hashes, on purpose
+        val hash = r.nextInt(10) match {
+          case 0 => None
+          case 1 => Some("h-shared")
+          case _ => Some("h-" + text.hashCode)
+        }
+        (keys(r.nextInt(keys.size)), ordinal(), text, hash)
+      }
+      var fp = "v1"
+      var last: () => (Long, Long) = () => (0L, 0L)
+      (0 until 12).foreach { step =>
+        if (r.nextInt(8) == 0) fp = if (fp == "v1") "v2" else "v1"
+        val kind = if (step == 0) "snapshot" else kinds(r.nextInt(kinds.size))
+        val rows = Seq.fill(r.nextInt(7))(upsert())
+        val batch = ups(rows)
+        // half the delete arms also tie an upsert of the batch on its
+        // key and ordinal (the delete wins)
+        val tie = rows.headOption.filter(_ => r.nextBoolean()).map(u => (u._1, u._2))
+        val dels = Seq.fill(r.nextInt(3))((keys(r.nextInt(keys.size)), ordinal())) ++ tie
+        val f = fp
+        val run: () => (Long, Long) = kind match {
+          case "snapshot" =>
+            val snap = ups(keys.filter(_ => r.nextInt(4) != 0).map(k =>
+              (k, ordinal(), texts(r.nextInt(texts.size)), Some("h-" + r.nextInt(3)))) ++
+              Seq.fill(r.nextInt(3))(upsert()))
+            () => (IncrementalOracle.syncSource(spark, snap, process, f, sinkA, trackA),
+              Incremental.syncSource(spark, snap, process, f, sinkB, trackB))
+          case "changes" =>
+            () => (IncrementalOracle.applyChanges(spark, batch, process, f, sinkA, trackA),
+              Incremental.applyChanges(spark, batch, process, f, sinkB, trackB))
+          case "stream" | "stream-no-ordinal" =>
+            val d = dels.toDF("source_key", "ordinal")
+            val deleted = if (kind == "stream") d else d.select("source_key")
+            () => (IncrementalOracle.applyChangeStream(spark, batch, deleted, process, f,
+                sinkA, trackA),
+              Incremental.applyChangeStreamTo(spark, batch, deleted, process, f,
+                graft.sinks.ParquetConnector, sinkB, trackB))
+          case "idle" => last
+        }
+        last = run
+        val (a, b) = run()
+        val clue = s"seed $seed step $step ($kind, $f)"
+        assert(b === a, clue)
+        assert(sinkRows(sinkB) === sinkRows(sinkA), clue)
+        assert(trackRows(trackB) === trackRows(trackA), clue)
+      }
+    }
+  }
+
+  test("a churn-shaped 50-row batch over 5,000 tracked rows commits in at most 20 jobs, " +
+      "and its token-base sync in at most 5") {
+    val tmp = Files.createTempDirectory("incr-jobs").toString
+    val (sink, track, base) = (s"$tmp/sink", s"$tmp/tracking", s"$tmp/token-base")
+    def text(i: Int, v: Int) = s"document $i version $v " + "body words " * (1 + i % 9)
+    val docs = (0 until 5000).map(i => (f"d$i%05d", 5L, text(i, 0)))
+    def keyed(rows: Seq[(String, Long, String)]) =
+      rows.toDF("source_key", "ordinal", "content")
+        .withColumn("content_hash", sha2(col("content"), 256))
+    Incremental.syncSource(spark, keyed(docs), process, "v1", sink, track)
+    IncrementalIndex.syncTokenBase(spark, base,
+      docs.map(d => (d._1, d._3)).toDF("source_key", "text"), "source_key", "text")
+    // per 20 rows: 8 updates, 4 inserts, 2 deletes, 2 bumps, 2 stale
+    // replays, 2 repeats of an update at a lower ordinal
+    val r = new Random(11)
+    val picked = r.shuffle(docs.indices.toList).take(30).toIndexedSeq
+    val updates = picked.take(20).map(i => (docs(i)._1, 7L, text(i, 1)))
+    val inserts = (0 until 10).map(i => (f"n$i%05d", 1L, text(5000 + i, 0)))
+    val bumps = picked.slice(20, 25).map(i => (docs(i)._1, 6L, docs(i)._3))
+    val stale = picked.slice(25, 30).map(i => (docs(i)._1, 2L, text(i, 2)))
+    val repeats = updates.take(5).map { case (k, _, t) => (k, 6L, t + " earlier") }
+    val deleted = (100 until 105).map(i => (docs(i)._1, 6L))
+    val batch = keyed(updates ++ inserts ++ bumps ++ stale ++ repeats)
+    val (nEval, applyJobs) = JobCount.during(spark)(Incremental.applyChangeStreamTo(
+      spark, batch, deleted.toDF("source_key", "ordinal"), process, "v1",
+      graft.sinks.ParquetConnector, sink, track))
+    assert(nEval === 30)
+    val changed = (updates ++ inserts).map(u => (u._1, u._3)).toDF("source_key", "text")
+    val (nTok, tokenJobs) = JobCount.during(spark)(IncrementalIndex.syncTokenBase(
+      spark, base, changed, "source_key", "text",
+      Some(deleted.map(_._1).toDF("source_key"))))
+    assert(nTok === 30)
+    assert(applyJobs <= 20, s"applyChangeStreamTo ran $applyJobs jobs")
+    assert(tokenJobs <= 5, s"syncTokenBase ran $tokenJobs jobs")
+    assert(spark.read.parquet(track).count() === 5000 + 10 - 5)
+    assert(spark.read.parquet(base).count() === 5000 + 10 - 5)
   }
 }

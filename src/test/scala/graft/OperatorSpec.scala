@@ -19,6 +19,7 @@ object TestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config(Tables.nanosConf._1, Tables.nanosConf._2)
       .config(Sessions.codegenCacheConf._1, Sessions.codegenCacheConf._2)
+      .config(Sessions.codegenClassNameConf._1, Sessions.codegenClassNameConf._2)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
