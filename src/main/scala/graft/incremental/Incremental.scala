@@ -35,7 +35,10 @@ import org.apache.spark.sql.types._
   * from the stored `target_keys` the delta carries. Both writes swap
   * by rename-aside ([[ParquetSink]]), so a crash mid-swap leaves the
   * previous version readable; the two writes are not one transaction.
-  * [[diff]] states the same per-key laws as a join over tracking.
+  * [[diff]] is the snapshot view of the delta [[syncSource]] commits:
+  * the same classified frame, read through projections. Source and
+  * tracking keys match null-safely: a NULL `source_key` is a key like
+  * any other.
   */
 object Incremental {
 
@@ -60,88 +63,40 @@ object Incremental {
   def readTracking(spark: SparkSession, path: String): DataFrame =
     ParquetSink.read(spark, path, trackingSchema).getOrElse(emptyTracking(spark))
 
-  /** The per-run delta of a keyed source versus the tracking state.
-    *
-    * @param toEvaluate  source rows needing (re)processing: new keys,
-    *                    newer-ordinal rows with changed content, or any
-    *                    non-stale row when the logic fingerprint changed
-    * @param ordinalOnly rows whose ordinal advanced but content+logic
-    *                    is unchanged (content-hash skip: bump only)
-    * @param toDelete    tracking rows whose source key disappeared
-    *                    (their target_keys become sink deletions)
-    */
-  final case class SourceDelta(
-      toEvaluate: DataFrame, ordinalOnly: DataFrame, toDelete: DataFrame)
+  /** The per-run delta of a keyed source versus the tracking state:
+    * the one labelled frame [[classify]] builds (`source_key`, `_op`,
+    * `_u`, `_t`), read through three projections. */
+  final class SourceDelta private[incremental] (
+      private[incremental] val classified: DataFrame, sourceColumns: Seq[String]) {
 
-  /** Per-key last-wins pre-dedup of a batch (r18, closing the r17
-    * pass-11 deferral): the reference serializes rows per source key —
-    * every arrival runs `should_skip` against the in-memory version
-    * BEFORE processing (source_indexer.rs:142-177) under a per-key
-    * Semaphore(1), so of N changes for one key only the max-ordinal
-    * one survives into the committed state (row_indexer.rs:110-133:
-    * never process an older ordinal; an equal ordinal of the same
-    * version kind skips). The batch analogue keeps exactly the
-    * max-ordinal row per key, carrying THAT row's content (the
-    * reference's change.data travels with its ordinal). Ordinal ties
-    * between upserts are adjudicated by arrival order in the
-    * reference; a batch has no arrival order, so the tie-break is a
-    * deterministic total order: (content_hash desc nulls last), then
-    * every remaining payload column string-cast desc nulls last in
-    * name order (r19 advice: two rows tied on ordinal AND hash but
-    * differing in payload are a hash-contract violation, yet the pick
-    * must still be stable across runs/partitionings — the same
-    * instability class Memo.cached closed in r18). Under an honored
-    * hash contract the payload keys never adjudicate anything. */
-  private def lastWinsPerKey(batch: DataFrame): DataFrame = {
-    val payloadTieBreak = batch.columns
-      .filterNot(Set("source_key", "ordinal", "content_hash"))
-      .sorted.toSeq
-      // quotedCol (r19 review): col() parses a dotted payload name as
-      // nested-field access — a `user.name` column that previously
-      // flowed through diff() untouched would throw here
-      .map(c => Incremental.quotedCol(c).cast("string").desc_nulls_last)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source_key")
-      .orderBy(col("ordinal").desc_nulls_last +:
-        col("content_hash").desc_nulls_last +: payloadTieBreak: _*)
-    batch.withColumn("_lw_rn", row_number().over(w))
-      .where(col("_lw_rn") === 1).drop("_lw_rn")
+    /** Source rows needing (re)processing: new keys, newer-ordinal
+      * rows with changed content, or any non-stale row when the logic
+      * fingerprint changed. The source's columns, in its order. */
+    def toEvaluate: DataFrame = upserts(Evaluate)
+
+    /** Rows whose ordinal advanced but content+logic is unchanged
+      * (content-hash skip: bump only). The source's columns. */
+    def ordinalOnly: DataFrame = upserts(Bump)
+
+    /** Tracking rows whose source key disappeared (their target_keys
+      * become sink deletions), in [[trackingSchema]]'s columns. */
+    def toDelete: DataFrame = op(Delete).select(col("source_key") +:
+      trackingSchema.fieldNames.toSeq.tail.map(f => col("_t").getField(f).as(f)): _*)
+
+    private[incremental] def op(o: String): DataFrame = classified.where(col("_op") === o)
+    private def upserts(o: String): DataFrame =
+      op(o).select(sourceColumns.map(c => col("_u").getField(c).as(c)): _*)
   }
 
-  /** Diff `source` (columns: source_key, ordinal, content_hash, + any
-    * payload) against tracking. Stale rows (ordinal < stored) are
-    * dropped entirely (late-write protection, row_indexer.rs:134-178).
-    * A batch carrying one source_key at several ordinals evaluates
-    * last-wins (one row, the max ordinal — see [[lastWinsPerKey]]);
-    * the per-key window hash-partitions by source_key, the exact
-    * partitioning the tracking join needs next, so at scale the
-    * exchange is reused rather than doubled. */
-  def diff(source: DataFrame, tracking: DataFrame, logicFp: String): SourceDelta = {
-    val t = tracking.select(
-      col("source_key"), col("ordinal").as("_t_ordinal"),
-      col("content_hash").as("_t_hash"), col("logic_fp").as("_t_fp"))
-    val joined = lastWinsPerKey(source).join(t, Seq("source_key"), "left")
-    val isNew = col("_t_ordinal").isNull
-    val fresh = col("ordinal") >= col("_t_ordinal")
-    // null-SAFE comparisons (r17 review pass 11): `=!=` yields SQL
-    // null on a null hash, so a tracked row arriving with a null
-    // content_hash fell out of BOTH the evaluate and the bump arm —
-    // silently skipped. A null-vs-value (or null-vs-null-flip) hash
-    // reads as changed: reprocessing is the safe law when the hash
-    // is unavailable.
-    val contentChanged = !(col("content_hash") <=> col("_t_hash"))
-    val logicChanged = col("_t_fp") =!= lit(logicFp)
-    val toEvaluate = joined
-      .where(isNew || (fresh && (contentChanged || logicChanged)))
-      .drop("_t_ordinal", "_t_hash", "_t_fp")
-    val ordinalOnly = joined
-      .where(!isNew && col("ordinal") > col("_t_ordinal") &&
-        !contentChanged && !logicChanged)
-      .drop("_t_ordinal", "_t_hash", "_t_fp")
-    val toDelete = tracking.join(
-      source.select(col("source_key")), Seq("source_key"), "left_anti")
-    SourceDelta(toEvaluate, ordinalOnly, toDelete)
-  }
+  /** Diff a snapshot `source` (columns: source_key, ordinal,
+    * content_hash, + any payload) against tracking: the delta a
+    * [[syncSource]] of it would commit. Stale rows (ordinal < stored)
+    * are dropped entirely (late-write protection,
+    * row_indexer.rs:134-178); a batch carrying one source_key at
+    * several ordinals evaluates last-wins (one row, the max ordinal). */
+  def diff(source: DataFrame, tracking: DataFrame, logicFp: String): SourceDelta =
+    new SourceDelta(classify(source, None, tracking, logicFp, fullSnapshot = true),
+      source.columns.toSeq)
 
   /** One incremental sync of a source into a sink.
     *
@@ -243,20 +198,28 @@ object Incremental {
     * stream takes only the rows of its own keys, by a broadcast
     * semi-join.
     *
-    * The per-key laws, as [[diff]] and [[applyChangeStreamTo]] state
-    * them:
-    *  - last-wins: `max_by` over (ordinal, content_hash, every payload
-    *    column cast to string in name order). An ascending struct
-    *    order sorts a null field first, so the max is
-    *    [[lastWinsPerKey]]'s "desc nulls last" pick.
+    * The per-key laws ([[applyChangeStreamTo]] states the delete arm):
+    *  - last-wins: of N rows for one key only the max-ordinal one is
+    *    kept, carrying that row's content. The reference serializes
+    *    rows per key and never processes an older ordinal
+    *    (source_indexer.rs:142-177, row_indexer.rs:110-133); a batch
+    *    has no arrival order to break ordinal ties with, so the pick
+    *    is a deterministic total order, stable across runs and
+    *    partitionings: `max_by` over (ordinal, content_hash, every
+    *    payload column cast to string in name order). An ascending
+    *    struct order sorts a null field first, so the max is the
+    *    "desc nulls last" pick. Under an honored hash contract the
+    *    payload never adjudicates anything.
     *  - the delete arm: one delete per key at its max ordinal; an
     *    upsert survives it only when strictly newer, and a surviving
     *    delete drops the stored row unless that row is strictly newer.
     *    A delete with no ordinal (or a delete stream with no ordinal
     *    column) is never skippable.
-    *  - the stored-row comparison of [[diff]]: evaluate a new key or a
-    *    fresh row whose content or logic changed; bump the ordinal of
-    *    a newer row with both unchanged; drop a stale row. */
+    *  - the stored-row comparison: evaluate a new key or a fresh row
+    *    whose content or logic changed; bump the ordinal of a newer
+    *    row with both unchanged; drop a stale row (late-write
+    *    protection, row_indexer.rs:134-178). A null hash reads as
+    *    changed: reprocessing is the safe law when it is unknown. */
   private def classify(upserts: DataFrame, deletes: Option[DataFrame],
       tracking: DataFrame, logicFp: String, fullSnapshot: Boolean): DataFrame = {
     val payload = upserts.columns
@@ -283,7 +246,7 @@ object Incremental {
       upserts.select("source_key").unionByName(d.select("source_key")))
     val stored =
       if (fullSnapshot) tracking
-      else tracking.join(broadcast(batchKeys), Seq("source_key"), "left_semi")
+      else ParquetSink.joinOnKey(tracking, broadcast(batchKeys), Seq("source_key"), "left_semi")
     val arms = Seq(arm(upserts, u = true, d = false, t = false)) ++
       deletes.map(arm(_, u = false, d = true, t = false)) :+
       arm(stored, u = false, d = false, t = true)
@@ -329,12 +292,13 @@ object Incremental {
       deletedSourceKeys: Option[DataFrame] = None): Long = {
     val counts = Observation()
     def counted(op: String) = count(when(col("_op") === op, lit(1))).as(op)
-    val delta = classify(source, deletedSourceKeys,
+    val delta = new SourceDelta(classify(source, deletedSourceKeys,
         readTracking(spark, trackingPath), logicFp, fullSnapshot)
       .observe(counts, counted(Evaluate), counted(Bump), counted(Delete))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      source.columns.toSeq)
     try {
-      materialize(delta)
+      materialize(delta.classified)
       // the optimizer drops the observation of a provably empty delta
       val n = counts.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
         .withDefaultValue(0L)
@@ -343,10 +307,7 @@ object Incremental {
       // neither table is rewritten
       if (n(Evaluate) + n(Bump) + n(Delete) == 0) return 0L
 
-      def op(o: String) = delta.where(col("_op") === o)
-      val evaluated = op(Evaluate).select(source.columns.toSeq.map(c =>
-        col("_u").getField(c).as(c)): _*)
-      val outputs = process(evaluated).cache()
+      val outputs = process(delta.toEvaluate).cache()
       try {
         // materialized here, so the writes below plan their joins
         // against its measured size
@@ -366,34 +327,40 @@ object Incremental {
         // process() derives target_key injectively from source_key
         // (chunk ids, etc.); a violating process() loses rows in BOTH
         // engines, which is why this subtracts only this run's outputs.
-        val staleKeys = delta.where(col("_op") =!= Bump)
-          .select(explode(col("_t.target_keys")).as("target_key"))
-          .join(outputs.select("target_key"), Seq("target_key"), "left_anti")
+        val staleKeys = ParquetSink.joinOnKey(
+          delta.classified.where(col("_op") =!= Bump)
+            .select(explode(col("_t.target_keys")).as("target_key")),
+          outputs.select("target_key"), Seq("target_key"), "left_anti")
         connector.applyMutation(spark, target,
           outputs.drop("source_key"), Seq("target_key"), Some(staleKeys))
 
         // commit tracking: evaluated rows with their new keysets,
-        // ordinal bumps over the stored rows, deleted sources dropped
-        val newKeys = outputs.groupBy(col("source_key"))
+        // ordinal bumps over the stored rows, deleted sources dropped.
+        // The keysets join on `struct(source_key)`: never null, so a
+        // NULL source key meets its own outputs, and a plain equi-join
+        // on newKeys' grouping key lets the planner drop the join where
+        // only the evaluated keys are read (the merge's key side)
+        val byKey = struct(col("source_key")).as("_k")
+        val newKeys = outputs.groupBy(byKey)
           .agg(collect_list(col("target_key")).as("target_keys"))
-        val evaluatedTracking = op(Evaluate)
-          .select(col("source_key"), col("_u.ordinal").as("ordinal"),
+        val evaluatedTracking = delta.op(Evaluate)
+          .select(byKey, col("source_key"), col("_u.ordinal").as("ordinal"),
             col("_u.content_hash").as("content_hash"))
-          .join(newKeys, Seq("source_key"), "left")
+          .join(newKeys, Seq("_k"), "left")
           .select(col("source_key"), col("ordinal"), col("content_hash"),
             lit(logicFp).as("logic_fp"),
             coalesce(col("target_keys"), array().cast("array<string>")).as("target_keys"))
-        val bumped = op(Bump).select(col("source_key"),
+        val bumped = delta.op(Bump).select(col("source_key"),
           col("_u.ordinal").as("ordinal"), col("_t.content_hash").as("content_hash"),
           col("_t.logic_fp").as("logic_fp"), col("_t.target_keys").as("target_keys"))
         def asTracking(df: DataFrame) = df.select(trackingSchema.fields.toSeq.map(f =>
           col(f.name).cast(f.dataType).as(f.name)): _*)
         ParquetSink.merge(spark, trackingPath,
           asTracking(evaluatedTracking).unionByName(asTracking(bumped)),
-          Seq("source_key"), Some(op(Delete).select("source_key")))
+          Seq("source_key"), Some(delta.op(Delete).select("source_key")))
       } finally outputs.unpersist()
       n(Evaluate)
-    } finally delta.unpersist()
+    } finally delta.classified.unpersist()
   }
 }
 
@@ -440,8 +407,8 @@ object Memo {
         // a valid deterministic pick, pass 8). Columns re-selected in
         // the INPUT order — compute() sees the schema it was given.
         // quotedCol/getField (r19 review): dotted payload names must
-        // not parse as nested access — the same class the
-        // lastWinsPerKey tie-break was fixed for
+        // not parse as nested access — the same class the last-wins
+        // tie-break was fixed for
         inputs.groupBy(col("_fp"))
           .agg(min(struct(payloadCols.map(Incremental.quotedCol): _*))
             .as("_rep"))

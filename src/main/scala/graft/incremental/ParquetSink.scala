@@ -57,20 +57,32 @@ object ParquetSink {
     * shape is the table's: schema changes go through
     * [[SetupDriver.applySetup]] first. The existing rows pass a
     * left-anti join against the delta's keys and the deleted keys;
-    * the join's build side needs no `distinct()`.
+    * the join's build side needs no `distinct()`. Keys match
+    * null-safely ([[joinOnKey]]): a NULL key is a key like any other,
+    * so an upsert replaces the row stored under it.
     */
   def merge(spark: SparkSession, path: String, rows: DataFrame,
       primaryKey: Seq[String], deletes: Option[DataFrame]): Unit = {
     val keys = primaryKey.map(col)
-    val newRows = deletes.fold(rows)(d => rows.join(d, primaryKey, "left_anti"))
+    val newRows = deletes.fold(rows)(d => joinOnKey(rows, d, primaryKey, "left_anti"))
     val result = read(spark, path, rows.schema) match {
       case None => newRows
       case Some(existing) =>
         val removed = deletes.fold(rows.select(keys: _*))(d =>
           rows.select(keys: _*).unionByName(d.select(keys: _*)))
-        existing.join(removed, primaryKey, "left_anti").unionByName(newRows)
+        joinOnKey(existing, removed, primaryKey, "left_anti").unionByName(newRows)
     }
     swapWrite(spark, path, result)
+  }
+
+  /** `left` joined to `right` on the `key` columns, NULL matching NULL
+    * (`<=>`; the planner keeps it an equi-join). `right`'s key columns
+    * are renamed apart first (`_rk0`, `_rk1`, ...). */
+  private[incremental] def joinOnKey(left: DataFrame, right: DataFrame,
+      key: Seq[String], how: String): DataFrame = {
+    val renamed = key.indices.map(i => s"_rk$i")
+    val on = key.zip(renamed).map { case (k, r) => col(k) <=> col(r) }.reduce(_ && _)
+    left.join(right.withColumnsRenamed(key.zip(renamed).toMap), on, how)
   }
 
   /** Write `df` to `path` via a staging dir and a rename-aside swap;

@@ -24,7 +24,7 @@ object ConnectedComponents {
     * from a partially propagated/contracted state: components can be
     * WRONGLY SPLIT. [[run]]/[[runStar]] log a warning in that case;
     * callers that must not proceed on a split labeling should use a
-    * `*WithStatus` face (or [[runAuto]], which escapes instead). */
+    * `*WithStatus` face. */
   final case class CcRun(labels: DataFrame, rounds: Int, converged: Boolean)
 
   /** @param edges undirected edge list (any orderable node type)
@@ -36,7 +36,7 @@ object ConnectedComponents {
     if (!r.converged)
       log.warn(s"min-label walk exhausted maxIter=$maxIter without " +
         "converging — labels may split components; raise maxIter or " +
-        "use runAuto/runStar for high-diameter graphs")
+        "use runStar for high-diameter graphs")
     r.labels
   }
 
@@ -72,42 +72,6 @@ object ConnectedComponents {
     }
     und.unpersist()
     CcRun(labels, iter, converged)
-  }
-
-  /** Min-label walk with a star-contraction ESCAPE (r18, closing the
-    * r17 verdict's API seam): run the walk up to `escapeRounds`; if it
-    * converges (the common dedup-graph case — shallow clusters, 2-4
-    * rounds, lighter per-round work than star contraction), those are
-    * the labels. If not, hand off to [[runStar]] — but not from
-    * scratch: the handoff edge set is the original edges PLUS one
-    * (node → current-best label) edge per unsettled node. A label edge
-    * joins a node to a vertex already reachable from it, so the
-    * component fixpoint is untouched, while every node enters the star
-    * rounds at distance 1 from the walk's best-known minimum — the
-    * escape pays for the abandoned walk rounds with a
-    * correspondingly-contracted starting diameter. The input edge
-    * frame is checkpointed ONCE up front so an expensive upstream
-    * candidate chain (q223's MinHash) is never derived twice. */
-  def runAuto(edges: DataFrame, srcCol: String, dstCol: String,
-      escapeRounds: Int = 5, starMaxIter: Int = 30): DataFrame = {
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .localCheckpoint(true)
-    val walk = runWithStatus(e0, "u", "v", escapeRounds)
-    if (walk.converged) {
-      // labels are an eager checkpoint — independent of e0 already
-      e0.unpersist()
-      walk.labels
-    } else {
-      val handoff = e0.unionByName(
-        walk.labels.where(col("node") =!= col("comp"))
-          .select(col("node").as("u"), col("comp").as("v")))
-      // runStar checkpoints its input eagerly on entry and returns a
-      // materialized labels frame, so both inputs release cleanly here
-      val out = runStar(handoff, "u", "v", starMaxIter)
-      walk.labels.unpersist()
-      e0.unpersist()
-      out
-    }
   }
 
   /** Large-star/small-star connected components (Kiveris et al. 2014,
@@ -146,17 +110,6 @@ object ConnectedComponents {
         "reaching the edge-set fixpoint — labels may split components; " +
         "raise maxIter")
     r.labels
-  }
-
-  /** [[runStar]] plus the number of large+small rounds it took —
-    * the spec-visible face (the chain-graph arm asserts the O(log² n)
-    * round count a diameter-bound walk cannot meet). Note `rounds`
-    * alone cannot distinguish converged-on-the-last-round from
-    * exhausted; use [[runStarWithStatus]] when that matters. */
-  def runStarWithRounds(edges: DataFrame, srcCol: String,
-      dstCol: String, maxIter: Int = 30): (DataFrame, Int) = {
-    val r = runStarWithStatus(edges, srcCol, dstCol, maxIter)
-    (r.labels, r.rounds)
   }
 
   /** [[runStar]] with the convergence status exposed (no warning). */

@@ -67,7 +67,7 @@ import graft.functions.{NativeText, Sketch, TextFunctions, VectorFunctions}
   *    SemDeDup [[semDedup]] / [[semDedupVerdicts]] (q192) /
   *    [[semDedupVerdictsLsh]] (q199).
   *  - group post-processing: [[connectedComponents]] (q176) /
-  *    [[connectedComponentsStar]] (q223) / [[connectedComponentsAuto]],
+  *    [[connectedComponentsStar]] (q223),
   *    [[dropNearDuplicates]] (spec-pinned), [[keepBestPerGroup]]
   *    (q224), [[crossGroupPairs]] (q225).
   *  - against a stored snapshot: [[nearDupAgainstSnapshot]] (q203,
@@ -701,23 +701,6 @@ object Dedup {
       maxIters: Int = 30): DataFrame =
     labelRoster(nodes, idCol,
       ConnectedComponents.runStar(pairs, aCol, bCol, maxIters)
-        .withColumnRenamed("node", "id"))
-
-  /** [[connectedComponents]] with the documented AUTO-SWITCH (r18,
-    * the r17 verdict's API seam): the min-label walk runs first (the
-    * right default on dedup-shaped graphs — shallow clusters, lighter
-    * rounds); if it has not converged after `escapeRounds`, the
-    * CURRENT edge set — original pairs plus one (node → best-known
-    * label) edge per unsettled node, the same fixpoint — hands off to
-    * the star contraction ([[ConnectedComponents.runAuto]]). Same
-    * output law as both explicit faces; the choice the LSH/banding
-    * faces already make automatically, now made here too. */
-  def connectedComponentsAuto(nodes: DataFrame, idCol: String,
-      pairs: DataFrame, aCol: String, bCol: String,
-      escapeRounds: Int = 5, starMaxIters: Int = 30): DataFrame =
-    labelRoster(nodes, idCol,
-      ConnectedComponents
-        .runAuto(pairs, aCol, bCol, escapeRounds, starMaxIters)
         .withColumnRenamed("node", "id"))
 
   /** The keep-one-per-group face: representatives plus every

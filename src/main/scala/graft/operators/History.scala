@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.DataType
   * Laws (oracle-pinned by the q239 gate, spec-pinned edge cases):
   *  - Total order per key: (tsCol, tieBreakCols...) ascending — the
   *    tie-break makes same-timestamp rows deterministic, the same
-  *    requirement lastWinsPerKey documents. A NULL key is a key like
+  *    requirement the incremental sync's last-wins pick documents
+  *    (`Incremental.classify`). A NULL key is a key like
   *    any other (windows and the incremental fold group nulls
   *    together — the q233 null-id convention).
   *  - Change compaction: a row whose payload is unchanged from its

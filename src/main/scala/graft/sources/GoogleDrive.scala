@@ -33,7 +33,8 @@ trait DriveClient extends Serializable {
   * routing, and the recent-updates change poll with the 1-second
   * cutoff buffer — all as the engine's KTable source contract
   * (source_key, ordinal, content_hash) feeding
-  * [[graft.incremental.Incremental.diff]].
+  * [[graft.incremental.Incremental.syncSource]];
+  * [[graft.incremental.Incremental.diff]] shows the delta it commits.
   */
 object GoogleDrive {
 

@@ -10,7 +10,8 @@ import graft.incremental.{Incremental, ParquetSink}
   * `diff` joins it to tracking, the delete arm is adjudicated by its
   * own joins, the batch is counted and probed for idleness, the stale
   * keys join tracking again, and the tracking table is rewritten whole
-  * from the untouched rows. */
+  * from the untouched rows. Its `diff` is the join law the spec
+  * compares `Incremental.diff`'s key sets against. */
 object IncrementalOracle {
 
   private def lastWinsPerKey(batch: DataFrame): DataFrame = {
@@ -27,7 +28,7 @@ object IncrementalOracle {
   }
 
   /** (toEvaluate, ordinalOnly, toDelete) */
-  private def diff(source: DataFrame, tracking: DataFrame,
+  def diff(source: DataFrame, tracking: DataFrame,
       logicFp: String): (DataFrame, DataFrame, DataFrame) = {
     val t = tracking.select(
       col("source_key"), col("ordinal").as("_t_ordinal"),

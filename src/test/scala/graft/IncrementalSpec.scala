@@ -432,8 +432,19 @@ class IncrementalSpec extends AnyFunSuite {
             val snap = ups(keys.filter(_ => r.nextInt(4) != 0).map(k =>
               (k, ordinal(), texts(r.nextInt(texts.size)), Some("h-" + r.nextInt(3)))) ++
               Seq.fill(r.nextInt(3))(upsert()))
-            () => (IncrementalOracle.syncSource(spark, snap, process, f, sinkA, trackA),
-              Incremental.syncSource(spark, snap, process, f, sinkB, trackB))
+            val clue = s"diff key sets, seed $seed step $step"
+            () => {
+              // diff is the delta the snapshot sync commits: its key
+              // sets equal the join law's over the same inputs
+              val tracking = Incremental.readTracking(spark, trackB)
+              val d = Incremental.diff(snap, tracking, f)
+              val (evaluate, bump, delete) = IncrementalOracle.diff(snap, tracking, f)
+              def keys(df: DataFrame) = df.select("source_key").as[String].collect().toSeq.sorted
+              assert(Seq(d.toEvaluate, d.ordinalOnly, d.toDelete).map(keys) ===
+                Seq(evaluate, bump, delete).map(keys), clue)
+              (IncrementalOracle.syncSource(spark, snap, process, f, sinkA, trackA),
+                Incremental.syncSource(spark, snap, process, f, sinkB, trackB))
+            }
           case "changes" =>
             () => (IncrementalOracle.applyChanges(spark, batch, process, f, sinkA, trackA),
               Incremental.applyChanges(spark, batch, process, f, sinkB, trackB))
@@ -452,6 +463,38 @@ class IncrementalSpec extends AnyFunSuite {
         assert(b === a, clue)
         assert(sinkRows(sinkB) === sinkRows(sinkA), clue)
         assert(trackRows(trackB) === trackRows(trackA), clue)
+      }
+    }
+  }
+
+  test("a NULL source_key is a key like any other: one tracking row carrying its " +
+      "target keys, no re-evaluation, and diff neither evaluates nor deletes it") {
+    val tmp = Files.createTempDirectory("incr-null-key").toString
+    def nullKeyed(delta: DataFrame): DataFrame = delta.select(col("source_key"),
+      coalesce(col("source_key"), lit("NULLKEY")).as("target_key"),
+      col("content").as("chunk_text"))
+    def batch(ordinal: Long, content: String): DataFrame =
+      Seq((null: String, ordinal, content), ("a", 1L, "alpha"))
+        .toDF("source_key", "ordinal", "content")
+        .withColumn("content_hash", sha2(col("content"), 256))
+    Seq("snapshot", "change-stream").foreach { mode =>
+      val (sink, track) = (s"$tmp/$mode/sink", s"$tmp/$mode/tracking")
+      def run(b: DataFrame): Long =
+        if (mode == "snapshot") Incremental.syncSource(spark, b, nullKeyed, "v1", sink, track)
+        else Incremental.applyChanges(spark, b, nullKeyed, "v1", sink, track)
+      Seq((1L, "first", 2L), (2L, "second", 1L), (2L, "second", 0L)).foreach {
+        case (ordinal, content, evaluated) =>
+          val b = batch(ordinal, content)
+          val clue = s"$mode, ordinal $ordinal, $content"
+          assert(run(b) === evaluated, clue)
+          val stored = spark.read.parquet(track).where(col("source_key").isNull)
+            .select("target_keys").as[Seq[String]].collect().toSeq
+          assert(stored === Seq(Seq("NULLKEY")), clue)
+          val sunk = spark.read.parquet(sink).where(col("target_key") === "NULLKEY")
+            .select("chunk_text").as[String].collect().toSeq
+          assert(sunk === Seq(content), clue)
+          val d = Incremental.diff(b, Incremental.readTracking(spark, track), "v1")
+          assert(d.toEvaluate.count() === 0 && d.toDelete.count() === 0, clue)
       }
     }
   }

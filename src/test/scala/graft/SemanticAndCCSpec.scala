@@ -136,8 +136,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val n = 64
     val edges = (1 until n).map(i =>
       (f"n$i%03d", f"n${i + 1}%03d")).toDF("s", "d")
-    val (labels, rounds) = ConnectedComponents.runStarWithRounds(
-      edges, "s", "d")
+    val r = ConnectedComponents.runStarWithStatus(edges, "s", "d")
+    val (labels, rounds) = (r.labels, r.rounds)
     val comps = labels.select($"comp").distinct().as[String].collect()
     assert(comps.toSeq === Seq("n001"))
     assert(labels.count() === n.toLong)
@@ -161,43 +161,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toMap
       assert(star === walk, s"trial $trial: faces diverge")
     }
-  }
-
-  test("r18 runAuto: the escape FIRES on the 64-chain (the walk " +
-      "provably cannot converge in escapeRounds) and the handoff " +
-      "still resolves the exact min-label components") {
-    val n = 64
-    val edges = (1 until n).map(i =>
-      (f"n$i%03d", f"n${i + 1}%03d")).toDF("s", "d")
-    // the walk alone, at the escape budget, is NOT converged — so a
-    // correct runAuto answer can only have come through the star
-    // handoff (the escape observably fired)
-    val walk = ConnectedComponents.runWithStatus(edges, "s", "d",
-      maxIter = 5)
-    assert(!walk.converged,
-      "a 63-diameter chain must not converge in 5 walk rounds")
-    walk.labels.unpersist()
-    val auto = ConnectedComponents.runAuto(edges, "s", "d")
-    assert(auto.select($"comp").distinct().as[String].collect()
-      .toSeq === Seq("n001"))
-    assert(auto.count() === n.toLong)
-  }
-
-  test("r18 runAuto: converges in the walk on a shallow graph (no " +
-      "escape) and the Dedup face matches both explicit faces") {
-    val edges = Seq(("b", "a"), ("b", "c"), ("x", "y")).toDF("s", "d")
-    val auto = ConnectedComponents.runAuto(edges, "s", "d")
-      .as[(String, String)].collect().toMap
-    assert(auto === Map("a" -> "a", "b" -> "a", "c" -> "a",
-      "x" -> "x", "y" -> "x"))
-    val nodes = Seq("a", "b", "c", "x", "y", "solo").toDF("id")
-    val viaAuto = operators.Dedup.connectedComponentsAuto(
-      nodes, "id", edges, "s", "d")
-      .as[(String, String, Boolean)].collect().toSet
-    val viaWalk = operators.Dedup.connectedComponents(
-      nodes, "id", edges, "s", "d")
-      .as[(String, String, Boolean)].collect().toSet
-    assert(viaAuto === viaWalk)
   }
 
   test("r18 status faces: converged-on-the-last-round is " +
