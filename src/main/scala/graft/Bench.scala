@@ -123,21 +123,31 @@ object BenchGuard {
     * `threshold`, up to `maxWaitMs`; if the bound expires still
     * loaded, proceed and let the card carry `loaded: true` — the run
     * is recorded as-is, never refused (the driver must always get a
-    * card). An unreadable loadavg (non-Linux) gates nothing. Sampler
-    * and sleeper are injected so BenchGuardSpec pins the walk without
-    * sleeping. Returns (waitedSec, stillLoaded). */
+    * card). An unreadable loadavg (non-Linux) gates nothing. Each
+    * wait step first tells `notice` the load it waits on. Sampler,
+    * sleeper and notice are injected so BenchGuardSpec pins the walk
+    * without sleeping. Returns (waitedSec, stillLoaded). */
   def loadGate(sample: () => Seq[Double], sleep: Long => Unit,
       threshold: Double = 2.0, stepMs: Long = 15000,
-      maxWaitMs: Long = 300000): (Double, Boolean) = {
+      maxWaitMs: Long = 300000,
+      notice: String => Unit = _ => ()): (Double, Boolean) = {
     var waited = 0L
     var cur = sample()
     while (cur.headOption.exists(_ >= threshold) && waited < maxWaitMs) {
+      notice(f"1-minute load ${cur.head}%.2f >= $threshold%.2f: waiting " +
+        s"${stepMs / 1000} s (${waited / 1000} of ${maxWaitMs / 1000} s waited)")
       sleep(stepMs)
       waited += stepMs
       cur = sample()
     }
     (waited / 1000.0, cur.headOption.exists(_ >= threshold))
   }
+
+  /** The gate's threshold for a session of `cpus` cores: a
+    * 1-minute load of half the cores (2.0 on 4 cores), at least 1.0.
+    * A box busy on fewer than half the session's cores leaves the
+    * measured cells their cores. */
+  def loadThreshold(cpus: Int): Double = math.max(1.0, cpus / 2.0)
 
   /** bench_schema 6 (r19 verdict item 5): `load_wait_sec` (how long
     * the pre-run gate waited) and `loaded` (true = the gate's bound
@@ -181,10 +191,13 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus.toInt)
     // schema-6 load gate: wait (bounded) for a quiet box BEFORE any
-    // measurement, so load_before reads < 2 on a gated card; if the
-    // bound expires, `loaded` flags the card instead of refusing it
+    // measurement, so load_before reads under the threshold on a gated
+    // card; if the bound expires, `loaded` flags the card instead of
+    // refusing it. Notices go to stderr: stdout carries only the card.
     val (loadWaitSec, loaded) =
-      BenchGuard.loadGate(() => BenchGuard.loadAvg(), Thread.sleep)
+      BenchGuard.loadGate(() => BenchGuard.loadAvg(), Thread.sleep,
+        threshold = BenchGuard.loadThreshold(cpus.toInt),
+        notice = msg => System.err.println(s"graft.Bench load gate: $msg"))
     val loadBefore = BenchGuard.loadAvg()
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.load(spark, sfDir, "lineitem").count()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Partitioning
+
 /** Incremental source indexing — the reference engine's core
   * differentiator (SURVEY.md §2.8), collapsed into idempotent batch
   * transactions:
@@ -178,11 +180,6 @@ object Incremental {
     sync(spark, batch, process, logicFp, connector, target, trackingPath,
       fullSnapshot = false, deletedSourceKeys = Some(deletedKeys))
 
-  /** Runs `df`'s plan once, filling its cache entry: one job, where
-    * `count()` adds an aggregate exchange. */
-  private def materialize(df: DataFrame): Unit =
-    df.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
-
   private val Evaluate = "evaluate"
   private val Bump = "bump"
   private val Delete = "delete"
@@ -298,7 +295,7 @@ object Incremental {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       source.columns.toSeq)
     try {
-      materialize(delta.classified)
+      Partitioning.materialize(delta.classified)
       // the optimizer drops the observation of a provably empty delta
       val n = counts.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
         .withDefaultValue(0L)
@@ -311,7 +308,7 @@ object Incremental {
       try {
         // materialized here, so the writes below plan their joins
         // against its measured size
-        materialize(outputs)
+        Partitioning.materialize(outputs)
         // exact stale-key deletion: the stored keys of re-evaluated and
         // deleted sources, minus this run's keys
         //

@@ -16,8 +16,9 @@ import graft.operators.Search
   * primary-key MERGE that re-tokenizes ONLY the changed documents —
   * and the per-corpus artifacts (df, stats, impacts) recompute from
   * it on demand: an eager rebuild is one narrow pass over the base's
-  * part files for df and the corpus stats, then one persisted,
-  * token-sorted impact frame ([[Search.buildIndexFromTokens]]); the
+  * part files for df and the corpus stats, then one persisted impact
+  * frame, partitioned by document and token-sorted
+  * ([[Search.buildIndexFromTokens]]); the
   * postings and document lengths stay projections of the base.
   * Recomputing them is not wasted work: BM25's idf and
   * length normalization are corpus-global, so ANY delta legitimately
@@ -42,9 +43,7 @@ object IncrementalIndex {
     * [[org.apache.spark.sql.Observation]] on the tokenized delta,
     * taken by the merge's write. The merge reads the delta twice, for
     * its rows and for its keys; column pruning passes the observation,
-    * so only the rows branch tokenizes. (The observation sits above
-    * [[Search.tokenBase]]: after a `df.rdd` on an observed frame, as
-    * `Partitioning.spread` makes, the observation reads zeros.) */
+    * so only the rows branch tokenizes. */
   def syncTokenBase(spark: SparkSession, basePath: String,
       changedDocs: DataFrame, idCol: String, textCol: String,
       deletedIds: Option[DataFrame] = None): Long = {

@@ -18,9 +18,11 @@ import graft.functions.{NativeText, TextFunctions}
   * stored token frame in one narrow pass (per-document term counts,
   * no shuffle of the postings) plus a vocab-sized df aggregate; the
   * corpus stats (N, avgdl) are observed on the same scan. Only the
-  * impact frame (id, token, term_score) is persisted, sorted by token
-  * within each partition. A query is then `filter(token ∈ terms)` on
-  * it + one groupBy(doc). No per-query full-text scan at 100 TB.
+  * impact frame (id, token, term_score) is persisted, partitioned by
+  * document id and sorted by token within each partition. A query is
+  * then `filter(token ∈ terms)` on it + one groupBy(doc) that the
+  * partitioning already satisfies: one job, no exchange, no per-query
+  * full-text scan at 100 TB.
   */
 object Search {
 
@@ -35,8 +37,9 @@ object Search {
     *  - `impacts`: (id, token, term_score), per posting the full BM25
     *    term contribution (idf × tf-saturation × length-norm) already
     *    folded in at the DEFAULT k1/b, so a query is
-    *    `filter(token ∈ terms) → groupBy(doc).sum`: one shuffle, no
-    *    joins, no corpus scan. Standard top-k search index shape.
+    *    `filter(token ∈ terms) → groupBy(doc).sum`: no joins, no
+    *    corpus scan, and over an eager index no shuffle. Standard
+    *    top-k search index shape.
     *
     * Of an eager build only `impacts` is persisted: `idx` and `dls`
     * are projections of the token base and `stats` is a local
@@ -84,17 +87,19 @@ object Search {
     * reads from its reference array
     * ([[NativeText.referencedDouble]]): the compiled class is the same
     * for every corpus, so a rebuild reuses it instead of compiling the
-    * literal-specialized one anew. Then `impacts`, sorted
-    * by token within each of the base's partitions, is persisted and
-    * materialized; nothing else is. The in-memory columnar scan keeps
-    * per-batch min/max stats, so a query's `token IN (...)` filter
-    * prunes whole cached batches instead of scanning the corpus-sized
-    * index.
+    * literal-specialized one anew. Then `impacts` is hash-partitioned
+    * by id into [[Partitioning.parallelism]] partitions, sorted by
+    * token within each, persisted and materialized; nothing else is.
+    * The document partitioning is what a read's `groupBy(id)` asks
+    * for, so a read plans no exchange and runs as one job. The
+    * in-memory columnar scan keeps per-batch min/max stats, so a
+    * query's `token IN (...)` filter can skip cached batches.
     *
     * Both faces sum a document's score in token order: its postings
     * come out of `termCountsOf` in token order and stay in one
-    * partition, and the eager face's sort keeps them in that order.
-    * So two eager builds and the lazy face of one base score
+    * partition, and the eager face's hash partitioning by id and its
+    * sort keep them so (a document holds each token once). So two
+    * eager builds and the lazy face of one base score
     * bit-identically. */
   def buildIndexFromTokens(base: DataFrame, idCol: String,
       eager: Boolean = false): Bm25Index = {
@@ -132,9 +137,10 @@ object Search {
       val impacts = impactsOf(postings, df, _.select(col("*"),
           NativeText.referencedDouble(statRow.getAs[java.lang.Double](0)).as("n_docs"),
           NativeText.referencedDouble(statRow.getAs[java.lang.Double](1)).as("avgdl")))
+        .repartition(Partitioning.parallelism(spark), col(idCol))
         .sortWithinPartitions("token")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      impacts.count()
+      Partitioning.materialize(impacts)
       Bm25Index(idx, dls,
         spark.createDataFrame(java.util.Arrays.asList(statRow), stats.schema),
         impacts, idCol)

@@ -1,9 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.storage.StorageLevel
 
-import graft.functions.VectorFunctions
+import graft.functions.{CosineSimExpr, VectorFunctions}
 
 /** Approximate / exact nearest-neighbor search over an embedding
   * column (reference: vector search, search_service.py:56-117 +
@@ -18,6 +22,10 @@ import graft.functions.VectorFunctions
   *    window. 100 TB tier: corpus stays partitioned, probes broadcast.
   *  - [[lshCosineCandidates]]: random-hyperplane signatures bucket the
   *    corpus so candidate generation is an equi-join, not a cross join.
+  *  - [[kmeansIvf]] / [[ivfSearch]]: the centroids live on the driver,
+  *    so a read chooses its probe clusters there and scans only their
+  *    rows, in one job. Training reads a caller's cached embeddings and
+  *    releases only the cache entries it created.
   */
 object SimilaritySearch {
 
@@ -166,6 +174,12 @@ object SimilaritySearch {
     * at scale those blocks are the dominant memory holder
     * ([[graft.operators.Dedup.semDedup]] shows the pattern: checkpoint
     * the narrow derivative, then release this).
+    *
+    * CACHE OWNERSHIP: the Lloyd passes read `df.select(idCol, vecCol)`
+    * from the cache. If that projection is already cached (for an
+    * `(id, embedding)` input it is the caller's own frame), the passes
+    * read the caller's entry and leave it in place; only an entry this
+    * call created is released before return.
     */
   def kmeansIvf(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): (DataFrame, Array[Array[Double]]) = {
@@ -173,8 +187,12 @@ object SimilaritySearch {
     // persisted across the iters+1 passes (the ConnectedComponents
     // iterative-algorithm precedent — without it every Lloyd pass
     // re-executes the full upstream lineage); released before return,
-    // after the final assignment is checkpointed
-    val base = df.select(col(idCol), col(vecCol)).persist()
+    // after the final assignment is checkpointed, unless the entry is
+    // the caller's: persisting an already-cached plan is a no-op, and
+    // its unpersist would evict the caller's cache
+    val base = df.select(col(idCol), col(vecCol))
+    val owned = base.storageLevel == StorageLevel.NONE
+    if (owned) base.persist()
     // seeds read any numeric element type (array<float|double>, the
     // same span elemReader advertises) and skip null vectors — a
     // Float-only getSeq ClassCastExceptioned on double embeddings
@@ -202,14 +220,12 @@ object SimilaritySearch {
       }
     }
     val out = assigned.localCheckpoint(true)
-    base.unpersist()
+    if (owned) base.unpersist()
     (out, cents)
   }
 
   /** The (cluster, centroid) frame of a driver-held centroid array —
-    * ONE definition of the cross-file schema contract ivfSearch and
-    * Dedup.semDedup both consume (r17 review pass 10: the snippet was
-    * duplicated verbatim in both). */
+    * the schema Dedup.semDedup consumes. */
   def centroidsDf(spark: org.apache.spark.sql.SparkSession,
       cents: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
@@ -218,21 +234,55 @@ object SimilaritySearch {
   }
 
   /** ANN over a k-means IVF index: score the query against centroids,
-    * keep the `probes` best clusters, exact top-k inside them. */
+    * keep the `probes` best clusters, exact top-k inside them.
+    *
+    * The probes are chosen on the driver, where the centroids already
+    * are: the [[CosineSimExpr]] the scan uses, evaluated interpreted,
+    * ranks them by score descending (NaN highest, null last, ties to
+    * the lower cluster id). The query must be a literal vector
+    * ([[vecLit]]); it is analyzed, not executed, so choosing runs no
+    * job. The chosen ids filter `assigned` as one array literal, which
+    * generated code reads from its reference array, so a read with
+    * another probe set reuses the compiled classes. A read is then
+    * one job: scan, filter, score, top-k. */
   def ivfSearch(assigned: DataFrame, cents: Array[Array[Double]],
       idCol: String, vecCol: String, query: Column, probes: Int,
       k: Int): DataFrame = {
-    val centDf = centroidsDf(assigned.sparkSession, cents)
-    val probed = centDf
-      .withColumn("rep_score", VectorFunctions.cosine(col("centroid"), query))
-      .orderBy(col("rep_score").desc, col("cluster").asc)
-      .limit(probes)
-      .select(col("cluster"))
-    assigned.join(broadcast(probed), Seq("cluster"))
+    val chosen = probeClusters(assigned, cents, query, probes)
+    assigned.where(array_contains(typedLit(chosen), col("cluster")))
       .withColumn("score", VectorFunctions.cosine(col(vecCol), query))
       .orderBy(col("score").desc, col(idCol).asc)
       .select(col(idCol), col("cluster"), round(col("score"), 6).as("score"))
       .limit(k)
+  }
+
+  /** The `probes` best clusters for `query`: the ids
+    * `orderBy(cosine(centroid, query).desc, cluster.asc).limit(probes)`
+    * over [[centroidsDf]] returns, in that order, computed without a
+    * job. */
+  private def probeClusters(assigned: DataFrame, cents: Array[Array[Double]],
+      query: Column, probes: Int): Seq[Int] = {
+    require(probes >= 0, s"probes must be non-negative: $probes")
+    val q = assigned.select(query).queryExecution.analyzed.expressions.head match {
+      case a: Alias => a.child
+      case e => e
+    }
+    require(q.foldable, "ivfSearch needs a literal query vector " +
+      s"(SimilaritySearch.vecLit), got: $q")
+    val qLit = Literal.create(q.eval(), q.dataType)
+    val centType = ArrayType(DoubleType, containsNull = false)
+    val scores = cents.map(c =>
+      Option(CosineSimExpr(Literal.create(c.toSeq, centType), qLit).eval())
+        .map(_.asInstanceOf[Double]))
+    // Spark's `score.desc`: NaN above every number, -0.0 equal to 0.0,
+    // null last; the sort is stable, so ties keep the lower cluster first
+    def compare(i: Int, j: Int): Int = (scores(i), scores(j)) match {
+      case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+      case (Some(_), None) => -1
+      case (None, Some(_)) => 1
+      case _ => 0
+    }
+    cents.indices.sortWith(compare(_, _) < 0).take(probes)
   }
 
   // ---- incremental IVF index maintenance (the vector twin of

@@ -117,6 +117,27 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(gate(Seq(Seq.empty)) === ((0.0, false), 0L))
   }
 
+  test("the load gate's threshold follows the session's cores, and each " +
+      "wait step prints a notice") {
+    assert(BenchGuard.loadThreshold(4) === 2.0)
+    assert(BenchGuard.loadThreshold(32) === 16.0)
+    assert(BenchGuard.loadThreshold(1) === 1.0)
+    val samples = Iterator(Seq(9.0, 8.0, 7.0), Seq(7.5, 7.0, 6.0), Seq(3.0, 5.0, 6.0))
+    val notices = Seq.newBuilder[String]
+    val r = BenchGuard.loadGate(() => samples.next(), _ => (),
+      threshold = BenchGuard.loadThreshold(8), stepMs = 15000, maxWaitMs = 300000,
+      notice = notices += _)
+    assert(r === ((30.0, false)))
+    val printed = notices.result()
+    assert(printed.length === 2)
+    assert(printed.head.contains("9.00 >= 4.00"), printed.head)
+    assert(printed(1).contains("15 of 300 s waited"), printed(1))
+    // a quiet box prints nothing
+    val quiet = Seq.newBuilder[String]
+    BenchGuard.loadGate(() => Seq(0.5), _ => (), threshold = 2.0, notice = quiet += _)
+    assert(quiet.result().isEmpty)
+  }
+
   test("bench card set is pinned: the 21 r6-r15 headline cells, the " +
       "round-17 LLM-training-data tier promotion (r16 verdict item 1), " +
       "the round-18 q226 group-census promotion (r17 verdict " +
